@@ -14,7 +14,13 @@ computes the same dense 0-based rank scalably:
 4. rank = partition offset + local row_number.
 
 Deterministic as long as the order columns form a total order (callers
-must include a unique tiebreaker, e.g. url_hash)."""
+must include a unique tiebreaker, e.g. url_hash).
+
+Steps 1 and 3 run Spark jobs when the rank is BUILT, and the result
+rides a persisted frame. The crawl wave (plans/wave.schedule_wave) does
+not use this operator: it ranks its ≤ Σ budgets selected rows lazily in
+one sorted partition. Callers: driver queries, fairness and the
+test-only plans/wave.schedule_candidates."""
 
 from __future__ import annotations
 

@@ -10,7 +10,9 @@ The reference's only control flow is a sequential poll loop
           → hash-keyed within-wave keep-first dedup (min-pack)
           → Bloom prefilter + exact anti-join vs url_seen
           → salted per-host budget selection [politeness]
-          → scalable global rank = deterministic visit order [ranking]
+          → global rank = deterministic visit order: the ≤ Σ budgets
+            selected skinny rows sorted in one partition (lazy —
+            building the wave runs no Spark job)
           → ONE payload rejoin (broadcast keys on url_hash + pack)
       → fetch join against the corpus                    [fetch]
       → commit fetch_log + url_seen                      [checkpoint]
@@ -231,7 +233,6 @@ def run_crawl(
         # rank, one payload rejoin — same results as the compositional
         # dedup_within_wave → anti_join_seen → schedule_candidates
         # path, pinned by the crawl-equality suite
-        wave_persists: list = []  # frames persisted by this wave's plan
         # NOTE: the maintained bloom_acc is deliberately NOT passed
         # here — the wave's prepartitioned anti-join ignores a blob by
         # design (ADVICE r5), so threading it in would be pure overhead
@@ -255,7 +256,6 @@ def run_crawl(
             # candidates are warehouse-parquet-backed (or persisted by
             # the in-memory branch below) — rescanning beats a cache
             persist_wide=False,
-            persist_tracker=wave_persists,
         ).withColumn("visit_rank", (F.lit(visit_base) + F.col("_wave_rank")))
         fetched = fetcher(ranked.drop("_wave_rank"))
 
@@ -301,15 +301,6 @@ def run_crawl(
                 # latter would re-execute the whole wave plan
                 seen_index.append(fetched.select("url_hash", "host_hash"))
             url_seen = warehouse.read("url_seen", empty_schema=URL_SEEN_SCHEMA)
-            # everything live is now on disk — drop exactly the frames
-            # this wave persisted (the ranking operator's internal
-            # cache, tracked by schedule_candidates). NOT a session
-            # clearCache(): that would evict every cache in the session,
-            # including ones other applications hold on a shared
-            # cluster, and the still-needed docs_clean corpus pin.
-            for p in wave_persists:
-                p.unpersist()
-            wave_persists.clear()
         else:
             fetched = fetched.persist()
             url_seen = (
@@ -336,11 +327,6 @@ def run_crawl(
             F.count("*").alias("n"),
             F.sum((F.col("status") == 404).cast("long")).alias("n404"),
         ).first()
-        # in-memory branch: the stats action just materialized the
-        # persisted `fetched`, so the wave-plan caches under it can go
-        for p in wave_persists:
-            p.unpersist()
-        wave_persists.clear()
         n_visited = int(stats["n"] or 0)
         if n_visited == 0:
             break

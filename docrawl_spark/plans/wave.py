@@ -23,11 +23,21 @@ memory bus at ~500k urls/s regardless of core count — BENCH.md).
 
 Identical results to gate_and_select + with_global_rank over wide rows
 (the crawl-equality suite pins this: run_crawl routes through here).
+
+``schedule_wave`` — the engine's wave, which run_crawl calls — ranks
+differently from ``schedule_candidates``: the selected skinny rows
+(url_hash, host_hash, _pack — 24 B/row) are sorted in ONE partition and
+numbered by a row_number window: the same dense total order as
+with_global_rank, but lazy — no persist, sampling job, count collect or
+offsets broadcast — so building a wave runs no Spark job. One partition
+adds no scale limit: it holds at most Σ per-host budgets rows, and the
+consumers of the ranked keys already broadcast them whole
+(schedule_wave's payload rejoin, which run_crawl uses).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from docrawl_spark.functions.canon import url_hash_col
@@ -181,11 +191,12 @@ def schedule_wave(
     3. groupBy(url_hash) min-pack dedup (HashAggregate, map-side
        combine) — and the anti-join that follows reuses its hash
        partitioning, so the big side never re-shuffles;
-    4. salted budget top-k + scalable global rank over the decoded
-       (parent_rank, offset, url_hash) order — identical ordering to
-       the compositional path because (parent_rank, offset) is unique
-       per candidate row (each is one span slot of one fetched page),
-       so the clamped pack never has to break ties by depth;
+    4. salted budget top-k + a global rank in one sorted partition
+       over the (parent_rank, offset, url_hash) order — identical
+       ordering to the compositional path because (parent_rank,
+       offset) is unique per candidate row (each is one span slot of
+       one fetched page), so the clamped pack never has to break ties
+       by depth;
     5. ONE payload rejoin: the ranked keys (≤ Σ budgets rows)
        broadcast back onto the wide scan keyed on
        (url_hash, _pack) — the pack pins exactly the KEPT occurrence,
@@ -212,6 +223,12 @@ def schedule_wave(
     cache the wide frame between the skinny pipeline and the rejoin —
     pass False when candidates are storage-backed (a rescan beats a
     cache build; run_crawl's frontier is always parquet-backed).
+    ``persist_tracker``: a list that is handed the persisted ``wide``
+    frame — the only frame this call persists — so the caller can
+    unpersist it once the result is materialized. With
+    ``persist_wide=False`` nothing is persisted or tracked. Building the
+    result runs no Spark job (the rank is lazy, see
+    ``schedule_wave_stages``).
 
     ``payload=False`` skips the rejoin and returns the ranked SKINNY
     keys only — (url_hash, host_hash, parent_rank, offset, _pack,
@@ -230,8 +247,7 @@ def schedule_wave(
     if persist_wide and persist_tracker is not None:
         persist_tracker.append(wide)
     stages = schedule_wave_stages(
-        wide, hosts, n_salts, rank_col, rank_start, seen, bloom,
-        persist_tracker, fused=fused,
+        wide, hosts, n_salts, rank_col, rank_start, seen, bloom, fused=fused
     )
     ranked = stages["ranked"]
     if not payload:
@@ -283,7 +299,18 @@ def schedule_wave_stages(
       depth bits masked, so the decoded order columns never ride the
       window exchanges either;
     - ``ranked``: + deterministic dense global rank (same derived
-      order key), with parent_rank/offset decoded at the end.
+      order key, 0-based from ``rank_start``), with parent_rank/offset
+      decoded at the end. The selected rows are sorted in ONE partition
+      (a user ``repartition(1)`` — the only exchange the rank adds,
+      carrying the 24 B/row skinny columns) and numbered by a
+      row_number window partitioned on the constant partition id.
+      Bound: the partition holds at most Σ per-host budgets rows — the
+      same set every consumer already broadcasts in one piece — so it
+      is no new scale limit. It is lazy, like every other stage:
+      building the stages runs no Spark job.
+
+    ``persist_tracker`` is accepted for caller compatibility and
+    ignored: the stages persist nothing.
 
     ``fused=True`` (the single-exchange wave, round 5): ONE explicit
     ``repartition(P, host_hash, _salt)`` replaces BOTH the dedup
@@ -410,13 +437,16 @@ def schedule_wave_stages(
     selected = budget_topk(
         unseen, order_cols, n_salts, budget_dim=budget_dim, salt_col=salt_col
     )
-    ranked = with_global_rank(
-        selected,
-        order_cols,
-        rank_col=rank_col,
-        start=rank_start,
-        persist_tracker=persist_tracker,
-    )
+    # the global rank: ONE sorted partition of the ≤ Σ budgets selected
+    # rows. Partitioning the window on the (constant) partition id
+    # rather than on nothing keeps Spark's "No Partition Defined" WARN
+    # out of every wave; the SinglePartition exchange satisfies it, so
+    # no second exchange follows.
+    one = selected.repartition(1).withColumn("_pid", F.spark_partition_id())
+    w = Window.partitionBy("_pid").orderBy(*[c.asc() for c in order_cols])
+    ranked = one.withColumn(
+        rank_col, F.row_number().over(w).cast("long") + F.lit(rank_start - 1)
+    ).drop("_pid")
     parent_rank, offset, _ = unpack_order_cols(F.col("_pack"))
     ranked = ranked.withColumn("parent_rank", parent_rank).withColumn(
         "offset", offset
