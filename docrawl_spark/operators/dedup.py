@@ -1,9 +1,10 @@
-"""Frontier seen-set dedup: Bloom prefilter + exact anti-join.
+"""Seen-set probes outside the crawl wave: Bloom prefilter + exact
+anti-join on url_hash.
 
-The reference never revisits a URL only because the user's sequential
-program doesn't re-request it; at 10^10-frontier scale "have I seen
-this url_hash" is the hottest operator in the engine. Two layers
-(SURVEY.md §4.2):
+The crawl wave resolves seen-ness inside its own single exchange
+(plans/wave.schedule_wave). This operator serves the probes that are
+NOT co-partitioned with it — recrawl/requeue checks and seen tables
+bucketed by url_hash. Two layers (SURVEY.md §4.2):
 
 - **Bloom prefilter** (optional): ``bloom_filter_agg`` over the seen
   url_hashes → one binary blob → ``might_contain`` evaluated in the
@@ -40,48 +41,27 @@ def anti_join_seen(
     candidates: DataFrame,
     url_seen: DataFrame,
     bloom: bytes | None = None,
-    prepartitioned: bool = False,
 ) -> DataFrame:
     """Rows of ``candidates`` whose url_hash is not in ``url_seen``.
 
-    ``prepartitioned=True``: the caller guarantees ``candidates`` is
-    already hash-partitioned on url_hash (e.g. the output of the
-    within-wave dedup groupBy). Then the exact join reuses that
-    partitioning — zero candidate-side exchange, only the seen side
-    shuffles — and the Bloom prefilter is deliberately SKIPPED:
+    With a ``bloom`` blob, rows the Bloom rejects skip the anti-join
+    shuffle and only the might-contain fraction pays the exact join —
+    worth it where candidates are NOT co-located with the seen set
+    (recrawl/requeue probes, the storage-bucketed seen table of the
+    BENCH.md 100 TB notes). Without one, the join stays unhinted so
+    Spark can still pick a broadcast-hash anti-join for a small seen
+    set, which moves ZERO candidate bytes.
 
-    - its exchange-skipping value is nil here (the big side moves no
-      bytes either way), so all it could save is the in-JVM hash
-      probe of the build relation — cheaper than the Arrow round-trip
-      the probe UDF costs;
-    - measured (this repo, Spark 4.1): a pandas/Arrow UDF projection
-      BREAKS outputPartitioning propagation — inserting the probe
-      column between the dedup aggregate and the join makes the
-      planner RE-EXCHANGE the whole candidate side, costing the exact
-      shuffle the partition reuse avoids. A Bloom in this position is
-      strictly negative until Spark exposes a codegen bloom probe
-      (``bloom_filter_agg``/``might_contain`` are not in the public
-      registry as of 4.1).
-
-    The Bloom stays load-bearing where candidates are NOT co-located
-    with the dedup partitioning: the split path below, recrawl/requeue
-    probes, and the storage-bucketed seen table (BENCH.md 100 TB
-    notes), where rows it rejects skip the anti-join shuffle.
-    ``shuffle_hash`` hint (prepartitioned path ONLY): build the
-    (hash-only) seen side, never sort the candidate stream. The hint
-    is gated on ``prepartitioned`` because a join-strategy hint
-    overrides the auto-broadcast threshold — the generic bloom-None
-    path (schedule_candidates, fixtures, small seen sets) keeps the
-    unhinted join so Spark can still pick a broadcast-hash anti-join
-    that moves ZERO candidate bytes (ADVICE r5)."""
-    if bloom is None or prepartitioned:
-        seen_side = url_seen.select("url_hash")
-        if prepartitioned:
-            seen_side = seen_side.hint("shuffle_hash")
-        return candidates.join(seen_side, "url_hash", "left_anti")
+    The crawl wave does not use this operator: plans/wave.schedule_wave
+    runs a 3-key anti-join co-partitioned with its dedup exchange,
+    where a Bloom probe is measured-negative (a pandas/Arrow UDF
+    projection breaks outputPartitioning propagation, so the planner
+    re-exchanges the very candidate side the co-partitioning saves)."""
+    if bloom is None:
+        return candidates.join(url_seen.select("url_hash"), "url_hash", "left_anti")
     # Persist before splitting: the union of two filters over the same
-    # parent would otherwise execute the parent (e.g. the within-wave
-    # dedup groupBy) twice.
+    # parent would otherwise execute the parent (e.g. an upstream
+    # groupBy) twice.
     flagged = candidates.withColumn(
         "_maybe", might_contain_col(candidates, bloom, "url_hash")
     ).persist()

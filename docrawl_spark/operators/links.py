@@ -90,10 +90,9 @@ def pack_order_col(
 ) -> Column:
     """The wave's keep-first order key packed into ONE BIGINT:
     (parent_rank+1) << 25 | min(offset, 2^20-1) << 5 | min(depth, 31).
-    min(pack) == lexicographic min of (parent_rank, offset) — shared by
-    the within-wave dedup and the integrated skinny wave
-    (plans/wave.schedule_wave), whose payload rejoin keys on the SAME
-    packed value computed on both sides."""
+    min(pack) == lexicographic min of (parent_rank, offset) — the
+    within-wave dedup key of plans/wave.schedule_wave, whose payload
+    rejoin keys on the SAME packed value computed on both sides."""
     parent_rank = parent_rank if parent_rank is not None else F.col("parent_rank")
     offset = offset if offset is not None else F.col("offset")
     depth = depth if depth is not None else F.col("depth")
@@ -114,34 +113,6 @@ def unpack_order_cols(pack: Column) -> tuple[Column, Column, Column]:
         .bitwiseAND(F.lit((1 << _OFF_BITS) - 1))
         .cast("int"),
         pack.bitwiseAND(F.lit((1 << _DEPTH_BITS) - 1)).cast("int"),
-    )
-
-
-def dedup_within_wave(candidates: DataFrame) -> DataFrame:
-    """Keep-first within-wave dedup: one row per canonical url, the one
-    with the smallest (parent_rank, offset) — a plain groupBy
-    (map-side combinable), no window.
-
-    ``discovered_by`` is NOT carried through (a string in the agg
-    buffer would demote the aggregate); lineage is relational —
-    parent_rank IS the parent's fetch_log.visit_rank (see
-    plans/crawl.py's lineage restore)."""
-    # shuffle only (url, pack): host/host_hash/url_hash are pure
-    # functions of url, cheaper to recompute on the (smaller) survivor
-    # set than to ship through the shuffle
-    from docrawl_spark.functions.canon import host_of_col, url_hash_col
-
-    packed = candidates.select("url", pack_order_col().alias("_pack"))
-    agg = packed.groupBy("url").agg(F.min("_pack").alias("_p"))
-    parent_rank, offset, depth = unpack_order_cols(F.col("_p"))
-    return agg.select(
-        url_hash_col("url").alias("url_hash"),
-        "url",
-        host_of_col("url").alias("host"),
-        url_hash_col(host_of_col("url")).alias("host_hash"),
-        parent_rank.alias("parent_rank"),
-        offset.alias("offset"),
-        depth.alias("depth"),
     )
 
 

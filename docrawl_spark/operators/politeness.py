@@ -116,7 +116,7 @@ def budget_topk(
 
     ``salt_col``: name of a PRE-MATERIALIZED salt column — must equal
     ``pmod(url_hash, n_salts)`` — from a caller whose frame is already
-    hash-partitioned on (host_hash, salt) (the fused wave): reusing the
+    hash-partitioned on (host_hash, salt) (the crawl wave): reusing the
     caller's column lets the planner see the phase-1 window partition
     keys match the incoming partitioning, so phase 1 runs with NO
     exchange. When None the salt is derived here (identical values)."""

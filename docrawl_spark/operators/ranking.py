@@ -19,8 +19,7 @@ must include a unique tiebreaker, e.g. url_hash).
 Steps 1 and 3 run Spark jobs when the rank is BUILT, and the result
 rides a persisted frame. The crawl wave (plans/wave.schedule_wave) does
 not use this operator: it ranks its ≤ Σ budgets selected rows lazily in
-one sorted partition. Callers: driver queries, fairness and the
-test-only plans/wave.schedule_candidates."""
+one sorted partition. Callers: driver queries and fairness."""
 
 from __future__ import annotations
 
@@ -29,9 +28,9 @@ from pyspark.sql import functions as F
 
 
 def _as_cols(order_cols: list) -> list[Column]:
-    """Accept column names or Column expressions — expression order
-    keys (e.g. ``shiftright(_pack, 5)``) let the wave sort on a derived
-    key without materializing it through the exchange."""
+    """Accept column names or Column expressions — an expression order
+    key sorts on a derived value without materializing it through the
+    exchange."""
     return [F.col(c) if isinstance(c, str) else c for c in order_cols]
 
 
@@ -41,16 +40,9 @@ def with_global_rank(
     rank_col: str = "rank",
     start: int = 0,
     num_partitions: int | None = None,
-    persist_tracker: list | None = None,
 ) -> DataFrame:
     """Append ``rank_col`` = dense global 0-based position of each row in
-    the total order of ``order_cols`` (+ ``start``).
-
-    ``persist_tracker``: optional list the operator appends its
-    internal persisted frame to (the range-partitioned copy the result
-    rides on). Callers that materialize the result elsewhere (e.g. a
-    warehouse commit) should then ``unpersist()`` each tracked frame —
-    precise cache cleanup instead of a session-global clearCache()."""
+    the total order of ``order_cols`` (+ ``start``)."""
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     # Persist the input FIRST: repartitionByRange runs a sampling job to
     # pick range boundaries, and without a cache that sampling pass
@@ -70,8 +62,6 @@ def with_global_rank(
     # disagree with the collected counts. (MEMORY_AND_DISK — safe under
     # memory pressure.)
     local = local.persist()
-    if persist_tracker is not None:
-        persist_tracker.append(local)
     counts = (
         local.groupBy("_pid").count().orderBy("_pid").collect()
     )  # one row per partition — tiny; also materializes `local`

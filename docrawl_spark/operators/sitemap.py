@@ -4,8 +4,8 @@ Real crawls bootstrap (and re-crawl) from sitemaps: per-host XML
 documents listing <url><loc/><lastmod/><priority/></url> entries. This
 operator parses them JVM-side with Spark 4's native ``from_xml`` (no
 Python in the path) into frontier-seed rows; lastmod feeds recrawl
-scheduling (operators/recrawl) and priority can seed the host-priority
-rank (plans/wave.schedule_candidates host_priority).
+scheduling (operators/recrawl); priority is parsed but no scheduler
+consumes it yet.
 
 Scale shape: one column expression per sitemap document — a corpus of
 sitemaps parses as an ordinary projected scan, no shuffle; explode

@@ -93,9 +93,9 @@ def _ensure_oracle_aux(
 
 
 def materialize_oracle_aux(spark: SparkSession, sf_dir: str) -> None:
-    """Build every oracle side table (idempotent). bench.py calls this
-    BEFORE the timing loop so registry callables time the operator,
-    not the one-time aux write."""
+    """Build every oracle side table (idempotent). Call this BEFORE a
+    timing loop so registry callables time the operator, not the
+    one-time aux write."""
     _ensure_oracle_aux(spark, sf_dir, list(_AUX_TABLES))
 
 
@@ -601,7 +601,7 @@ def q_sitemap_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_within_wave_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keep-first dedup (operators/links.dedup_within_wave shape): one
+    """Keep-first dedup (the keep-first rule of plans/wave.schedule_wave): one
     row per url keeping the smallest (parent_rank, offset). Candidates
     are synthesized: each doc discovered by (doc_id % 7) with offset
     doc_id % 5, duplicated per (doc_id % 50) target url."""

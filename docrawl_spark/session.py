@@ -29,7 +29,7 @@ def get_spark(
 
     ``master=None`` leaves the master to spark-submit (the cluster
     launch path, scripts/submit_crawl.py); the default builds a
-    ``local[cpus]`` session for tests/bench.
+    ``local[cpus]`` session for tests and perfbench.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
@@ -64,7 +64,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # subset co-partitioning: a join whose children are hash-
         # partitioned on a SUBSET of the join keys reuses that layout
-        # instead of re-exchanging on the full key set — the fused wave
+        # instead of re-exchanging on the full key set — the wave
         # partitions ONCE on (host_hash, _salt) and runs dedup, the
         # 3-key seen anti-join, and the phase-1 politeness window on
         # that single exchange (plans/wave.schedule_wave_stages)
@@ -80,7 +80,7 @@ def get_spark(
 
 def stop_spark() -> None:
     """Fully stop the active session so a new master can be used
-    (needed by bench.py's local[8] vs local[32] scaling runs)."""
+    (perfbench's fresh-session set-ups)."""
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()

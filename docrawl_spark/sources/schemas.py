@@ -88,9 +88,9 @@ URL_SEEN_SCHEMA = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), False),
         T.StructField("url", T.StringType(), False),
-        # stored (not derived) so the fused wave's 3-key anti-join
-        # consumes the seen side without re-parsing url strings every
-        # wave (plans/wave.schedule_wave_stages fused path); legacy
+        # stored (not derived) so the wave's 3-key anti-join consumes
+        # the seen side without re-parsing url strings every wave
+        # (plans/wave.schedule_wave_stages); legacy
         # tables without the column still work — the wave derives it
         T.StructField("host_hash", T.LongType(), False),
         T.StructField("first_wave", T.IntegerType(), False),

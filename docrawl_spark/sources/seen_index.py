@@ -1,6 +1,6 @@
 """Bucketed seen-set probe index — the cross-wave scan-reuse path.
 
-The fused wave (plans/wave.schedule_wave_stages, round 5) resolves
+The crawl wave (plans/wave.schedule_wave_stages) resolves
 seen-ness with a 3-key anti-join whose sides are co-partitioned on
 (host_hash, _salt). Within one wave that costs one explicit repartition
 per side; ACROSS waves the accumulated seen side was still re-shuffled
@@ -95,10 +95,10 @@ class BucketedSeenIndex:
         )
 
     def frame(self) -> DataFrame:
-        """The probe side for the fused anti-join: a bucketed scan that
-        already reports HashPartitioning(host_hash, _salt, n_buckets).
-        The fused wave detects the precomputed ``_salt`` column and
-        skips its own repartition of this side."""
+        """The probe side for the wave's 3-key anti-join: a bucketed
+        scan that already reports HashPartitioning(host_hash, _salt,
+        n_buckets). The wave detects the precomputed ``_salt`` column
+        and skips its own repartition of this side."""
         return self.spark.table(self.table)
 
     def rebuild(self, url_seen: DataFrame) -> None:

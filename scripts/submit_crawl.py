@@ -11,7 +11,7 @@ Reads the three input tables (parquet; Iceberg identifiers work the
 same through spark.read.table), runs (or resumes) the wave loop, and
 leaves every artifact committed in the warehouse. The same entry run
 at two cluster sizes (N and 4N executors) is the scaling-efficiency
-protocol; in the sandbox, bench.py substitutes local[8]/local[32].
+protocol.
 """
 
 from __future__ import annotations
@@ -28,21 +28,13 @@ def main() -> None:
     p.add_argument("--warehouse", required=True)
     p.add_argument("--max-waves", type=int, default=10)
     p.add_argument("--resume", action="store_true")
-    p.add_argument("--no-bloom", action="store_true")
     p.add_argument("--n-salts", type=int, default=8)
-    # sizes the seen-set Bloom; it auto-grows 4x (rebuild from the
-    # committed url_seen) whenever the crawl outgrows it, so under-
-    # sizing costs a rebuild, never correctness. Set ~total expected
-    # urls on big cluster runs to avoid rebuilds (1<<30 ≈ 915 MB blob).
-    p.add_argument("--expected-total-urls", type=int, default=1 << 20)
     # cross-wave seen-set scan reuse: persist the seen set as a catalog
     # table bucketed by (host_hash, salt) at this path so each wave's
     # anti-join probes it pre-partitioned from storage (zero seen-side
     # exchange — the growing-seen tail killer at 10^10 urls). On a real
     # cluster, point it at a durable location (s3://.../seen_idx).
     p.add_argument("--seen-index", default=None)
-    # the round-4 two-exchange wave shape, for A/B only
-    p.add_argument("--no-fused-wave", action="store_true")
     args = p.parse_args()
 
     from docrawl_spark.plans.crawl import run_crawl
@@ -71,12 +63,9 @@ def main() -> None:
         seeds,
         max_waves=args.max_waves,
         warehouse=wh,
-        use_bloom=not args.no_bloom,
         n_salts=args.n_salts,
         resume=args.resume,
         collect_visits=False,
-        expected_total_urls=args.expected_total_urls,
-        fused=not args.no_fused_wave,
         seen_index=seen_index,
     )
     print(json.dumps({"waves": result.metrics}))

@@ -12,6 +12,7 @@ from docrawl_spark.plans.crawl import run_crawl
 from docrawl_spark.plans.simulator import clean_spans, simulate_crawl
 from docrawl_spark.operators.scan import scan_documents
 from docrawl_spark.sources.fixtures import fixture_to_dfs, generate_web
+from docrawl_spark.sources.seen_index import BucketedSeenIndex
 from docrawl_spark.sources.storage import Warehouse
 
 
@@ -35,22 +36,32 @@ def test_span_cleaning_parity(spark, fixture_web):
         assert sim == fx.documents[url], f"simulator!=clean fixture for {url}"
 
 
-@pytest.mark.parametrize("use_bloom", [False, True])
-def test_crawl_order_and_seen_set(spark, fixture_web, tmp_path, use_bloom):
+@pytest.mark.parametrize("use_seen_index", [False, True])
+def test_crawl_order_and_seen_set(spark, fixture_web, tmp_path, use_seen_index):
+    """Both seen-set probes — the accumulated url_seen table and the
+    bucketed BucketedSeenIndex scan perfbench's crawl runs — visit
+    exactly what the simulator visits."""
     fx = fixture_web
     sim = simulate_crawl(fx.documents_raw, fx.hosts, fx.seeds, max_waves=6)
     docs_raw, hosts_df, seeds_df = fixture_to_dfs(spark, fx, raw=True)
-    wh = Warehouse(str(tmp_path / f"wh_{use_bloom}"), spark)
-    res = run_crawl(
-        spark,
-        docs_raw,
-        hosts_df,
-        seeds_df,
-        max_waves=6,
-        warehouse=wh,
-        use_bloom=use_bloom,
-        collect_visits=True,
-    )
+    wh = Warehouse(str(tmp_path / "wh"), spark)
+    index = None
+    if use_seen_index:
+        index = BucketedSeenIndex(spark, str(tmp_path / "seen_index"))
+    try:
+        res = run_crawl(
+            spark,
+            docs_raw,
+            hosts_df,
+            seeds_df,
+            max_waves=6,
+            warehouse=wh,
+            collect_visits=True,
+            seen_index=index,
+        )
+    finally:
+        if index is not None:
+            index.drop()
     assert res.visits == sim.visits
     assert res.seen_urls == sim.seen
     # sanity: the crawl actually crawled (multi-wave, multi-host)

@@ -21,40 +21,7 @@ def test_crawl_equality_across_seeds(spark, tmp_path, seed):
     wh = Warehouse(str(tmp_path / f"wh{seed}"), spark)
     res = run_crawl(
         spark, docs_raw, hosts_df, seeds_df, max_waves=5, warehouse=wh,
-        use_bloom=True, collect_visits=True,
-    )
-    assert res.visits == sim.visits
-    assert res.seen_urls == sim.seen
-    # use_bloom=True maintains the incremental Bloom for the
-    # non-co-partitioned consumers (recrawl/requeue probes) and
-    # returns it — with NO false negatives over the fetched set
-    # (ADVICE r5: the wave itself never consumes it)
-    import numpy as np
-
-    from docrawl_spark.functions.bloom import Bloom
-
-    assert res.seen_bloom is not None
-    hashes = np.array(
-        [
-            r["url_hash"]
-            for r in res.fetch_log.select("url_hash").collect()
-        ],
-        dtype=np.int64,
-    )
-    assert Bloom.from_bytes(res.seen_bloom).contains(hashes).all()
-
-
-def test_bloom_growth_preserves_exactness(spark, tmp_path):
-    """Deliberately undersized Bloom (capacity 4) forces repeated 4x
-    growth rebuilds mid-crawl; results must stay identical to the
-    simulator (the exact anti-join is always the source of truth)."""
-    fx = generate_web(seed=404)
-    sim = simulate_crawl(fx.documents_raw, fx.hosts, fx.seeds, max_waves=5)
-    docs_raw, hosts_df, seeds_df = fixture_to_dfs(spark, fx)
-    wh = Warehouse(str(tmp_path / "whg"), spark)
-    res = run_crawl(
-        spark, docs_raw, hosts_df, seeds_df, max_waves=5, warehouse=wh,
-        use_bloom=True, expected_total_urls=4, collect_visits=True,
+        collect_visits=True,
     )
     assert res.visits == sim.visits
     assert res.seen_urls == sim.seen
@@ -140,7 +107,7 @@ def test_crawl_equality_dense_web_tight_budgets(spark, tmp_path, seed):
     """Heavier stress shape: denser web, more waves, and a seed list
     perturbed with a duplicate seed plus an unknown-host seed (404
     fetch: seen, no spans) — ordering under budget pressure must still
-    match the simulator exactly, bloom on."""
+    match the simulator exactly."""
     fx = generate_web(
         seed=seed, n_hosts=8, pages_cold=8, pages_hot=24, n_seeds=6
     )
@@ -154,7 +121,7 @@ def test_crawl_equality_dense_web_tight_budgets(spark, tmp_path, seed):
     wh = Warehouse(str(tmp_path / f"whd{seed}"), spark)
     res = run_crawl(
         spark, docs_raw, hosts_df, seeds_df, max_waves=7, warehouse=wh,
-        use_bloom=True, collect_visits=True,
+        collect_visits=True,
     )
     assert res.visits == sim.visits
     assert res.seen_urls == sim.seen

@@ -43,7 +43,7 @@ def test_crawl_invariant_to_salts_and_partitions(spark, tmp_path):
         docs_rp = docs_raw.repartition(parts)
         res = run_crawl(
             spark, docs_rp, hosts, seeds, max_waves=4, warehouse=wh,
-            use_bloom=False, n_salts=salts, collect_visits=True,
+            n_salts=salts, collect_visits=True,
         )
         results.append((res.visits, res.seen_urls))
     assert results[0] == results[1]
@@ -254,178 +254,6 @@ def test_spans_kind_filter_stays_inside_generator(spark):
     docs_raw, _, _ = fixture_to_dfs(spark, fx)
     plan = plan_of(spans_of_kind(docs_raw, "link"), mode="simple")
     assert "Generate posexplode" in plan or "Generate explode(filter(" in plan
-
-
-def test_schedule_candidates_windows_are_payload_skinny(spark):
-    """The at-scale wave shuffle shape (plans/wave.py): the politeness
-    window exchanges must carry ONLY the skinny schedule columns —
-    never the url/discovered_by string payload (the strings rejoin once
-    at the end, measured 4-5x shuffle-byte reduction at 32M rows)."""
-    from docrawl_spark.plans.wave import schedule_candidates
-
-    cands = spark.range(1000).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
-        F.concat(
-            F.lit("https://h"), (F.col("id") % 7).cast("string"),
-            F.lit(".test/p"), F.col("id").cast("string"),
-        ).alias("url"),
-        F.concat(F.lit("h"), (F.col("id") % 7).cast("string"), F.lit(".test")).alias("host"),
-        F.xxhash64(F.concat(F.lit("h"), (F.col("id") % 7).cast("string"))).alias("host_hash"),
-        F.lit(1).alias("depth"),
-        F.col("id").alias("parent_rank"),
-        (F.col("id") % 31).cast("int").alias("offset"),
-        F.lit("x").alias("discovered_by"),
-    )
-    hosts = spark.range(7).select(
-        F.concat(F.lit("h"), F.col("id").cast("string"), F.lit(".test")).alias("host"),
-        F.lit(3).alias("budget"),
-        F.lit("").alias("robots_blob"),
-    )
-    out = schedule_candidates(cands, hosts)
-    plan = plan_of(out)
-    # every host_hash-keyed exchange (the window shuffles) is skinny
-    blocks = plan.split("\n\n")
-    window_exchanges = [
-        b
-        for b in blocks
-        if ") Exchange" in b and "hashpartitioning(host_hash" in b
-    ]
-    assert window_exchanges, "expected host_hash window exchanges in the plan"
-    for b in window_exchanges:
-        assert "url#" not in b, f"url string rides a window exchange:\n{b}"
-        assert "discovered_by#" not in b, f"payload rides a window exchange:\n{b}"
-    # correctness: per-host budget respected and ranks dense
-    rows = out.collect()
-    assert len(rows) == 7 * 3
-    ranks = sorted(r["_wave_rank"] for r in rows)
-    assert ranks == list(range(21))
-    spark.catalog.clearCache()
-
-
-def test_schedule_candidates_seen_dedup_equivalence(spark):
-    """Folding the seen-set anti-join into the skinny section must give
-    exactly anti-join-then-schedule (robots gate and seen filter
-    commute), with the Bloom prefilter on and off."""
-    from docrawl_spark.operators.dedup import anti_join_seen, build_seen_bloom
-    from docrawl_spark.plans.wave import schedule_candidates
-
-    cands = spark.range(2000).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
-        F.concat(
-            F.lit("https://h"), (F.col("id") % 11).cast("string"),
-            F.lit(".test/p"), F.col("id").cast("string"),
-        ).alias("url"),
-        F.concat(F.lit("h"), (F.col("id") % 11).cast("string"), F.lit(".test")).alias("host"),
-        F.xxhash64(F.concat(F.lit("h"), (F.col("id") % 11).cast("string"))).alias("host_hash"),
-        F.lit(1).alias("depth"),
-        F.col("id").alias("parent_rank"),
-        (F.col("id") % 31).cast("int").alias("offset"),
-        F.lit("x").alias("discovered_by"),
-    )
-    hosts = spark.range(11).select(
-        F.concat(F.lit("h"), F.col("id").cast("string"), F.lit(".test")).alias("host"),
-        F.lit(5).alias("budget"),
-        F.lit("").alias("robots_blob"),
-    )
-    seen = spark.range(0, 2000, 3).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-    )
-    expected = {
-        (r["url"], r["_wave_rank"])
-        for r in schedule_candidates(
-            anti_join_seen(cands, seen), hosts
-        ).collect()
-    }
-    assert len(expected) == 11 * 5
-    for blob in (None, build_seen_bloom(seen, expected_items=700)):
-        got = {
-            (r["url"], r["_wave_rank"])
-            for r in schedule_candidates(
-                cands, hosts, seen=seen, bloom=blob
-            ).collect()
-        }
-        assert got == expected
-    spark.catalog.clearCache()
-
-
-def test_schedule_candidates_host_priority_reorders_not_reselects(spark):
-    """host_priority (e.g. pagerank_hosts output) must change ONLY the
-    inter-host global visit order: the selected set and the per-host
-    politeness budgets are identical to the default run, and every url
-    of a higher-priority host ranks before every url of a lower one."""
-    from docrawl_spark.plans.wave import schedule_candidates
-
-    cands = spark.range(200).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
-        F.concat(
-            F.lit("https://h"), (F.col("id") % 3).cast("string"),
-            F.lit(".test/p"), F.col("id").cast("string"),
-        ).alias("url"),
-        F.concat(F.lit("h"), (F.col("id") % 3).cast("string"), F.lit(".test")).alias("host"),
-        F.xxhash64(
-            F.concat(F.lit("h"), (F.col("id") % 3).cast("string"), F.lit(".test"))
-        ).alias("host_hash"),
-        F.col("id").alias("parent_rank"),
-        (F.col("id") % 31).cast("int").alias("offset"),
-    )
-    hosts = spark.range(3).select(
-        F.concat(F.lit("h"), F.col("id").cast("string"), F.lit(".test")).alias("host"),
-        F.lit(4).alias("budget"),
-        F.lit("").alias("robots_blob"),
-    )
-    prio = spark.createDataFrame(
-        [("h2.test", 900), ("h0.test", 500), ("h1.test", 100)],
-        "host string, priority long",
-    )
-    base = schedule_candidates(cands, hosts, rank_col="visit_rank")
-    pri = schedule_candidates(cands, hosts, rank_col="visit_rank", host_priority=prio)
-    b = {r["url_hash"]: r for r in base.collect()}
-    p = {r["url_hash"]: r for r in pri.collect()}
-    assert set(b) == set(p)  # same selected set
-    # ranks dense in both
-    assert sorted(r["visit_rank"] for r in b.values()) == list(range(len(b)))
-    assert sorted(r["visit_rank"] for r in p.values()) == list(range(len(p)))
-    # priority run: h2 block first, then h0, then h1
-    by_host = {}
-    for r in p.values():
-        by_host.setdefault(r["host"], []).append(r["visit_rank"])
-    assert max(by_host["h2.test"]) < min(by_host["h0.test"])
-    assert max(by_host["h0.test"]) < min(by_host["h1.test"])
-    # within a host, the default order (parent_rank) is preserved
-    h2 = sorted(
-        (r["visit_rank"], r["parent_rank"]) for r in p.values() if r["host"] == "h2.test"
-    )
-    assert [x[1] for x in h2] == sorted(x[1] for x in h2)
-
-
-def test_schedule_candidates_fractional_priority(spark):
-    """Sitemap-style fractional priorities (0.0-1.0 doubles) must still
-    reorder hosts — micro-unit scaling regression (a bare long cast
-    floored them all to 0 and the feature no-opped)."""
-    from docrawl_spark.plans.wave import schedule_candidates
-
-    cands = spark.range(60).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
-        F.concat(F.lit("https://f"), (F.col("id") % 2).cast("string"),
-                 F.lit(".test/p"), F.col("id").cast("string")).alias("url"),
-        F.concat(F.lit("f"), (F.col("id") % 2).cast("string"), F.lit(".test")).alias("host"),
-        F.xxhash64(F.concat(F.lit("f"), (F.col("id") % 2).cast("string"), F.lit(".test"))).alias("host_hash"),
-        F.col("id").alias("parent_rank"),
-        F.lit(0).alias("offset"),
-    )
-    hosts = spark.range(2).select(
-        F.concat(F.lit("f"), F.col("id").cast("string"), F.lit(".test")).alias("host"),
-        F.lit(5).alias("budget"),
-        F.lit("").alias("robots_blob"),
-    )
-    prio = spark.createDataFrame(
-        [("f0.test", 0.1), ("f1.test", 0.9)], "host string, priority double"
-    )
-    out = schedule_candidates(cands, hosts, rank_col="visit_rank", host_priority=prio)
-    by_host = {}
-    for r in out.collect():
-        by_host.setdefault(r["host"], []).append(r["visit_rank"])
-    assert max(by_host["f1.test"]) < min(by_host["f0.test"])
 
 
 def test_anchor_index_phase1_window_is_salted(spark):
@@ -1016,14 +844,52 @@ def test_kmv_mins_salted_two_phase_and_pair_join_shape(spark):
     assert "BroadcastHashJoin" in p2 or "SortMergeJoin" in p2
 
 
-def test_schedule_wave_matches_compositional_path(spark):
+def _wave_oracle(cands, hosts, seen_hashes, rank_start=0):
+    """Pure-Python reference for one wave, from the simulator's rules
+    3-5 (plans/simulator.py) and sharing no Spark code with the wave:
+    keep the first row per url in (parent_rank, offset) order, drop
+    seen url_hashes, robots-gate on the path, keep at most ``budget``
+    urls per host (DEFAULT_BUDGET for unknown hosts) in that order, and
+    rank the survivors densely from ``rank_start``. ``cands``/``hosts``
+    are collected Rows; returns (url_hash, url, host, parent_rank,
+    offset, rank) tuples."""
+    from docrawl_spark.plans.simulator import DEFAULT_BUDGET, host_of, path_of
+
+    budget_of = {h["host"]: h["budget"] for h in hosts}
+    robots_of = {
+        h["host"]: [ln for ln in re.split(r"\r?\n", h["robots_blob"] or "") if ln]
+        for h in hosts
+    }
+    order = sorted(cands, key=lambda r: (r["parent_rank"], r["offset"], r["url_hash"]))
+    first = {}
+    for r in order:
+        first.setdefault(r["url"], r)
+    taken, out = {}, []
+    for r in order:
+        url = r["url"]
+        if first[url] is not r or r["url_hash"] in seen_hashes:
+            continue
+        host = host_of(url)
+        if any(path_of(url).startswith(p) for p in robots_of.get(host, [])):
+            continue
+        if taken.get(host, 0) >= budget_of.get(host, DEFAULT_BUDGET):
+            continue
+        taken[host] = taken.get(host, 0) + 1
+        out.append(r)
+    return [
+        (r["url_hash"], r["url"], r["host"], r["parent_rank"], r["offset"], rank_start + k)
+        for k, r in enumerate(out)
+    ]
+
+
+def test_schedule_wave_matches_oracle(spark):
     """The integrated hash-only wave (plans/wave.schedule_wave: gate +
     hash-keyed dedup + anti-join + budgets + rank + pack-keyed rejoin)
-    must reproduce dedup_within_wave → anti_join_seen →
-    schedule_candidates exactly — duplicates present, bloom on/off."""
-    from docrawl_spark.operators.dedup import anti_join_seen, build_seen_bloom
-    from docrawl_spark.operators.links import dedup_within_wave
-    from docrawl_spark.plans.wave import schedule_candidates, schedule_wave
+    must reproduce the pure-Python wave oracle exactly — duplicates
+    present, robots blocks, and both accepted seen schemas (stored
+    host_hash, or a legacy url-only frame that derives it)."""
+    from docrawl_spark.functions.canon import url_hash_col
+    from docrawl_spark.plans.wave import schedule_wave
 
     # 3 occurrences of each url with distinct (parent_rank, offset) —
     # keep-first must pick the smallest — plus hot-host skew
@@ -1032,13 +898,17 @@ def test_schedule_wave_matches_compositional_path(spark):
         F.col("id").alias("parent_rank"),
         (F.col("id") % 29).cast("int").alias("offset"),
     )
-    from docrawl_spark.functions.canon import url_hash_col
 
-    url = F.concat(
-        F.lit("https://h"), (F.col("uid") % 13).cast("string"),
-        F.lit(".test/p"), F.col("uid").cast("string"),
-    )
-    host = F.concat(F.lit("h"), (F.col("uid") % 13).cast("string"), F.lit(".test"))
+    def url_of(uid):
+        return F.concat(
+            F.lit("https://h"), (uid % 13).cast("string"),
+            F.lit(".test/p"), uid.cast("string"),
+        )
+
+    def host_of(uid):
+        return F.concat(F.lit("h"), (uid % 13).cast("string"), F.lit(".test"))
+
+    url, host = url_of(F.col("uid")), host_of(F.col("uid"))
     cands = base.select(
         url_hash_col(url).alias("url_hash"),
         url.alias("url"),
@@ -1055,25 +925,21 @@ def test_schedule_wave_matches_compositional_path(spark):
         F.when(F.col("id") % 3 == 0, F.lit("/p1")).otherwise(F.lit("")).alias("robots_blob"),
     )
     seen = spark.range(0, 1000, 4).select(
-        url_hash_col(
-            F.concat(
-                F.lit("https://h"), (F.col("id") % 13).cast("string"),
-                F.lit(".test/p"), F.col("id").cast("string"),
-            )
-        ).alias("url_hash")
+        url_hash_col(url_of(F.col("id"))).alias("url_hash"),
+        url_hash_col(host_of(F.col("id"))).alias("host_hash"),
+        url_of(F.col("id")).alias("url"),
     )
-    # compositional reference: dedup_within_wave drops discovered_by,
-    # so compare the shared columns (lineage is restored relationally
-    # by run_crawl; schedule_wave carries it through directly)
-    ref = {
-        tuple(r)
-        for r in schedule_candidates(
-            dedup_within_wave(cands), hosts, seen=seen
-        ).select("url_hash", "url", "host", "parent_rank", "offset", "_wave_rank").collect()
-    }
+    rows = cands.collect()
+    ref = set(
+        _wave_oracle(rows, hosts.collect(), {r["url_hash"] for r in seen.collect()})
+    )
     assert ref, "reference selection is empty — fixture broken"
-    for blob in (None, build_seen_bloom(seen, expected_items=300)):
-        got_df = schedule_wave(cands, hosts, seen=seen, bloom=blob)
+    # the fixture repeats urls and hits a robots rule
+    urls = [r["url"] for r in rows]
+    assert len(set(urls)) < len(urls)
+    assert "https://h0.test/p13" in urls  # blocked by h0's "/p1" rule
+    for seen_frame in (seen.select("url_hash", "host_hash"), seen.select("url_hash", "url")):
+        got_df = schedule_wave(cands, hosts, seen=seen_frame)
         got = {
             tuple(r)
             for r in got_df.select(
@@ -1087,7 +953,36 @@ def test_schedule_wave_matches_compositional_path(spark):
         for r in schedule_wave(cands, hosts, seen=seen).collect()
     }
     assert all(d == f"parent{p}" for p, d in lineage)
-    spark.catalog.clearCache()
+
+
+def test_schedule_wave_rejects_unusable_seen_frame(spark):
+    """The wave's 3-key anti-join needs the seen set's host_hash, stored
+    or derivable from its url: a seen frame with neither (or without
+    url_hash) is refused with an error naming both accepted schemas,
+    not left to fail as an unresolved column deep in the plan."""
+    from docrawl_spark.plans.wave import schedule_wave, schedule_wave_stages
+
+    cands = spark.range(10).select(
+        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
+        F.concat(F.lit("https://h.test/p"), F.col("id").cast("string")).alias("url"),
+        F.lit("h.test").alias("host"),
+        F.xxhash64(F.lit("h.test")).alias("host_hash"),
+        F.lit(1).alias("depth"),
+        F.col("id").alias("parent_rank"),
+        F.lit(0).alias("offset"),
+        F.lit("x").alias("discovered_by"),
+    )
+    hosts = spark.createDataFrame(
+        [("h.test", 3, "")], "host string, budget int, robots_blob string"
+    )
+    hash_only = cands.select("url_hash")
+    url_only = cands.select("url")
+    for build in (schedule_wave, schedule_wave_stages):
+        for bad in (hash_only, url_only):
+            with pytest.raises(ValueError) as err:
+                build(cands, hosts, seen=bad)
+            msg = str(err.value)
+            assert "(url_hash, host_hash)" in msg and "(url_hash, url)" in msg, msg
 
 
 def test_schedule_wave_no_exchange_carries_strings(spark):
@@ -1116,8 +1011,11 @@ def test_schedule_wave_no_exchange_carries_strings(spark):
         F.lit(3).alias("budget"),
         F.lit("").alias("robots_blob"),
     )
+    # host_hash follows the candidates' convention: the 3-key anti-join
+    # matches on it
     seen = spark.range(0, 700, 5).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
+        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
+        F.xxhash64(F.concat(F.lit("h"), (F.col("id") % 7).cast("string"))).alias("host_hash"),
     )
     out = schedule_wave(cands, hosts, seen=seen)
     plan = plan_of(out)
@@ -1131,17 +1029,12 @@ def test_schedule_wave_no_exchange_carries_strings(spark):
 
 
 def test_schedule_wave_exchanges_are_hash_minimal(spark):
-    """Round-4 tightening of the wave's shuffle shape (plans/wave.py):
-
-    - NO exchange carries ``_budget`` (broadcast-joined after each
-      politeness window) or the decoded ``parent_rank``/``offset``
-      columns (windows and rank order on ``shiftright(_pack, 5)``);
-    - the seen anti-join REUSES the dedup aggregate's url_hash
-      partitioning: exactly two url_hash-keyed exchanges exist in the
-      whole plan (the dedup shuffle + the seen side) — a third would
-      mean the candidate side re-exchanged, the regression a
-      pandas-UDF probe column in the join path causes (see
-      operators/dedup.anti_join_seen)."""
+    """The wave's shuffle shape stays hash-minimal (plans/wave.py): NO
+    exchange carries ``_budget`` (broadcast-joined after each
+    politeness window) or the decoded ``parent_rank``/``offset``
+    columns (windows and rank order on ``shiftright(_pack, 5)``). The
+    exchange count is pinned by
+    test_fused_wave_single_big_exchange_and_equality."""
     from docrawl_spark.plans.wave import schedule_wave
 
     # NB: host_hash MUST be xxhash64 of the FULL host string — the
@@ -1167,7 +1060,10 @@ def test_schedule_wave_exchanges_are_hash_minimal(spark):
         F.lit("").alias("robots_blob"),
     )
     seen = spark.range(0, 700, 5).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
+        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
+        F.xxhash64(
+            F.concat(F.lit("h"), (F.col("id") % 7).cast("string"), F.lit(".test"))
+        ).alias("host_hash"),
     )
     out = schedule_wave(cands, hosts, seen=seen)
     plan = plan_of(out)
@@ -1178,18 +1074,6 @@ def test_schedule_wave_exchanges_are_hash_minimal(spark):
         assert "_budget#" not in b, f"budget rides an exchange:\n{b}"
         assert "parent_rank#" not in b, f"parent_rank rides an exchange:\n{b}"
         assert "offset#" not in b, f"offset rides an exchange:\n{b}"
-    # explain("formatted") prints the AQE initial AND final plans, so
-    # the same logical exchange appears twice — dedupe on the
-    # (Input, partitioning) signature before counting
-    url_hash_keyed = {
-        re.sub(r"\(\d+\) |, \[plan_id=\d+\]|#\d+", "", b)
-        for b in shuffles
-        if "hashpartitioning(url_hash" in b
-    }
-    assert len(url_hash_keyed) == 2, (
-        f"expected exactly 2 distinct url_hash exchanges (dedup + seen "
-        f"side), got {len(url_hash_keyed)}:\n" + "\n---\n".join(url_hash_keyed)
-    )
     # and the selection itself stays correct under the hash-only shape
     rows = out.collect()
     assert len(rows) == 7 * 3
@@ -1197,19 +1081,17 @@ def test_schedule_wave_exchanges_are_hash_minimal(spark):
 
 
 def test_fused_wave_single_big_exchange_and_equality(spark):
-    """Round-5 single-exchange wave (plans/wave.schedule_wave_stages
-    fused=True): the big candidate side crosses EXACTLY ONE exchange —
-    the explicit repartition on (host_hash, _salt) — between the scan
-    and the (tiny) phase-2 window. The dedup HashAggregate regroups on
+    """The single-exchange wave (plans/wave.schedule_wave_stages): the
+    big candidate side crosses EXACTLY ONE exchange — the explicit
+    repartition on (host_hash, _salt) — between the scan and the
+    (tiny) phase-2 window. The dedup HashAggregate regroups on
     (host_hash, _salt, url_hash) with no exchange of its own, the
     3-key seen anti-join co-partitions via subset co-partitioning
     (spark.sql.requireAllClusterKeysForCoPartition=false), and the
     phase-1 politeness window reuses the same layout through
-    budget_topk(salt_col=...). Results are identical to the round-4
-    two-exchange shape, including with a LEGACY seen frame lacking
-    host_hash (derived from url in JVM codegen)."""
-    import re
-
+    budget_topk(salt_col=...). Results equal the pure-Python wave
+    oracle, including with a LEGACY seen frame lacking host_hash
+    (derived from url in JVM codegen)."""
     from docrawl_spark.functions.canon import host_of_col, url_hash_col
     from docrawl_spark.plans.wave import schedule_wave, schedule_wave_stages
 
@@ -1238,7 +1120,7 @@ def test_fused_wave_single_big_exchange_and_equality(spark):
 
     # -- plan shape ---------------------------------------------------------
     st = schedule_wave_stages(
-        c, hosts, n_salts=4, seen=seen.select("url_hash", "host_hash"), fused=True
+        c, hosts, n_salts=4, seen=seen.select("url_hash", "host_hash")
     )
     plan = st["selected"]._jdf.queryExecution().executedPlan().toString()
     salt_exchanges = [
@@ -1260,15 +1142,18 @@ def test_fused_wave_single_big_exchange_and_equality(spark):
     # exchanges touch the salt)
     assert "HashAggregate" in plan
 
-    # -- equality vs the round-4 shape, incl. legacy seen ------------------
-    def run(fused, seen_frame):
-        out = schedule_wave(
-            c, hosts, n_salts=4, rank_col="rk", seen=seen_frame, fused=fused
-        )
+    # -- equality vs the oracle, incl. legacy seen -------------------------
+    def run(seen_frame):
+        out = schedule_wave(c, hosts, n_salts=4, rank_col="rk", seen=seen_frame)
         return sorted((r["url"], r["rk"]) for r in out.collect())
 
-    base = run(False, seen.select("url_hash", "url"))
-    assert run(True, seen.select("url_hash", "host_hash")) == base
-    assert run(True, seen.select("url_hash", "url")) == base  # legacy derive
-    assert len(base) > 0
+    ref = sorted(
+        (r[1], r[5])
+        for r in _wave_oracle(
+            c.collect(), hosts.collect(), {r["url_hash"] for r in seen.collect()}
+        )
+    )
+    assert len(ref) > 0
+    assert run(seen.select("url_hash", "host_hash")) == ref
+    assert run(seen.select("url_hash", "url")) == ref  # legacy derive
     spark.catalog.clearCache()

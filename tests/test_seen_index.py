@@ -1,4 +1,4 @@
-"""BucketedSeenIndex: cross-wave scan reuse for the fused anti-join
+"""BucketedSeenIndex: cross-wave scan reuse for the wave's 3-key anti-join
 (VERDICT r4 item 5) — the seen side arrives pre-partitioned from a
 bucketed catalog table, so the wave anti-join shuffles NEITHER side."""
 
@@ -46,7 +46,7 @@ def test_index_roundtrip_append_rebuild_compact(spark, tmp_path):
 
 
 def test_fused_antijoin_probes_bucketed_scan_no_seen_exchange(spark, tmp_path):
-    """With the index as the seen side, the fused wave's plan must show
+    """With the index as the seen side, the wave's plan must show
     (a) the seen scan as a BUCKETED read (Bucketed: true) and (b) only
     ONE (host_hash, _salt) exchange in the whole selected-stage plan —
     the candidate side's explicit repartition; the accumulated seen set
@@ -79,9 +79,7 @@ def test_fused_antijoin_probes_bucketed_scan_no_seen_exchange(spark, tmp_path):
             F.lit(5).alias("budget"),
             F.lit("").alias("robots_blob"),
         )
-        st = schedule_wave_stages(
-            c, hosts, n_salts=4, seen=idx.frame(), fused=True
-        )
+        st = schedule_wave_stages(c, hosts, n_salts=4, seen=idx.frame())
         plan = st["selected"]._jdf.queryExecution().executedPlan().toString()
         assert "Bucketed: true" in plan, plan
         salt_exchanges = [
@@ -143,14 +141,6 @@ def test_run_crawl_with_seen_index_matches_simulator(spark, tmp_path):
             idx2.drop()
     finally:
         idx.drop()
-
-    with pytest.raises(ValueError, match="fused"):
-        run_crawl(
-            spark, docs, hosts, seeds, max_waves=1,
-            warehouse=Warehouse(str(tmp_path / "wh3"), spark),
-            seen_index=BucketedSeenIndex(spark, str(tmp_path / "sidx3")),
-            fused=False,
-        )
 
 
 def test_run_crawl_rejects_salt_mismatch(spark, tmp_path):

@@ -6,8 +6,8 @@ one sorted partition of the selected skinny rows, built lazily.
 - The rank equals ``operators/ranking.with_global_rank`` over the same
   ``selected`` frame: the same dense total order on
   ``(shiftright(_pack, 5), url_hash)``, at any shuffle-partition count
-  and ``rank_start``, including requeued rows that share the sentinel
-  pack 0 and so tie-break on ``url_hash``.
+  and ``rank_start``, with and without a seen set, including requeued
+  rows that share the sentinel pack 0 and so tie-break on ``url_hash``.
 """
 
 from __future__ import annotations
@@ -83,8 +83,8 @@ def test_wave_build_runs_no_spark_job(spark):
     prev = sc.getLocalProperty("spark.jobGroup.id")
     sc.setJobGroup(group, "wave build")
     try:
-        out = schedule_wave(cands, hosts, seen=seen, fused=True)
-        stages = schedule_wave_stages(cands, hosts, seen=seen, fused=True)
+        out = schedule_wave(cands, hosts, seen=seen)
+        stages = schedule_wave_stages(cands, hosts, seen=seen)
         assert _jobs_in(sc, group) == 0
         # the counter does see this group's jobs once something forces
         assert stages["ranked"].count() > 0
@@ -100,7 +100,7 @@ def test_wave_rank_is_one_skinny_sorted_partition(spark, plan_of):
     its window is partitioned (no empty partition spec, which is what
     makes Spark log "No Partition Defined for Window operation!")."""
     cands, hosts, seen = _wave_inputs(spark)
-    ranked = schedule_wave_stages(cands, hosts, seen=seen, fused=True)["ranked"]
+    ranked = schedule_wave_stages(cands, hosts, seen=seen)["ranked"]
     plan = ranked._jdf.queryExecution().executedPlan().toString()
     single = [ln for ln in plan.splitlines() if "Exchange SinglePartition" in ln]
     assert len(single) == 1 and "REPARTITION_BY_NUM" in single[0], plan
@@ -116,17 +116,17 @@ def test_wave_rank_is_one_skinny_sorted_partition(spark, plan_of):
 
 
 @pytest.mark.parametrize(
-    "n_part,rank_start,fused",
+    "n_part,rank_start,with_seen",
     [(1, 37, True), (4, 0, True), (4, 1_000_003, False), (17, 37, True)],
 )
-def test_wave_rank_equals_global_rank(spark, n_part, rank_start, fused):
+def test_wave_rank_equals_global_rank(spark, n_part, rank_start, with_seen):
     cands, hosts, seen = _wave_inputs(spark)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
     try:
         stages = schedule_wave_stages(
             cands, hosts, n_salts=4, rank_col="_r", rank_start=rank_start,
-            seen=seen, fused=fused,
+            seen=seen if with_seen else None,
         )
         order = [F.shiftright(F.col("_pack"), _DEPTH_BITS), F.col("url_hash")]
         ref = with_global_rank(
@@ -149,7 +149,7 @@ def test_wave_rank_empty_selection(spark):
     cands, hosts, seen = _wave_inputs(spark)
     stages = schedule_wave_stages(
         cands.where(F.lit(False)), hosts, rank_col="_r", rank_start=5,
-        seen=seen, fused=True,
+        seen=seen,
     )
     assert stages["ranked"].count() == 0
     order = [F.shiftright(F.col("_pack"), _DEPTH_BITS), F.col("url_hash")]
