@@ -3,15 +3,15 @@
 The reference's spider-function dispatch (docrawl_core.py:1098) is a
 string→method registry; here the registry is this package: every
 function is either a built-in Column expression factory or an
-Arrow-batched pandas UDF. No row-at-a-time Python UDFs anywhere.
+Arrow-batched UDF. URL canonicalization has one implementation,
+``canonicalize_arrow``, behind the Arrow-native ``abs_url_arrow``. No
+row-at-a-time Python UDFs anywhere.
 """
 
 from docrawl_spark.functions.canon import (  # noqa: F401
     abs_url_arrow,
-    abs_url_udf,
     build_abs_url,
     canonicalize_arrow,
-    canonicalize_batch,
     dedup_normalize_url_col,
     host_of_col,
     normalize_seed_url_col,

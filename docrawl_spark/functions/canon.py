@@ -20,13 +20,14 @@ Plus the client-side quirk (docrawl_client.py:200-201): seeds get
 ``http://`` prepended only when the substring 'http' appears NOWHERE
 in the url.
 
-Everything Spark-facing is vectorized: classification + assembly run
-in pyarrow compute kernels (RE2, C++ — ~3x the pandas object-dtype
-equivalent, ~225k rows/s/thread measured), base urls are parsed once
-per DISTINCT parent via factorization, and leading-'../' refs are
+There is one Spark-facing implementation, ``canonicalize_arrow`` behind
+the Arrow-native ``abs_url_arrow`` UDF: classification + assembly run
+in pyarrow compute kernels (RE2, C++), base urls are parsed once per
+DISTINCT parent via dictionary encoding, and leading-'../' refs are
 resolved by grouped segment-popping; only the odd residue ('.'
-segments, malformed bases, ';' holders) falls back to the exact scalar
-walk, still inside one Arrow batch.
+segments, malformed bases, ';' holders, control characters, bracketed
+or non-ASCII netlocs) falls back to the exact scalar walk
+(``_canon_scalar``), still inside one Arrow batch.
 """
 
 from __future__ import annotations
@@ -39,17 +40,15 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
-
-try:  # Spark 4.1+: Arrow-native scalar UDFs (no pandas boundary)
-    from pyspark.sql.functions import arrow_udf
-except ImportError:  # pragma: no cover - env pins pyspark 4.1.2
-    arrow_udf = None
+from pyspark.sql.functions import arrow_udf
 
 # --------------------------------------------------------------------------
 # Exact scalar semantics (mirrors docrawl/utils.py:5-39; used by the
 # reference-semantics simulator and as the slow-path inside the UDF).
 # --------------------------------------------------------------------------
+
+_MSG_NO_BASE = "The domain url must be provided if the scraped url is a relative url."
+_MSG_UNDERFLOW = "Relative link points to a path that does not exist."
 
 
 def build_abs_url(scraped_url: str, domain_url: str | None = None) -> str:
@@ -60,9 +59,7 @@ def build_abs_url(scraped_url: str, domain_url: str | None = None) -> str:
     if parsed.netloc != "":
         return parsed.geturl()
     if domain_url is None:
-        raise ValueError(
-            "The domain url must be provided if the scraped url is a relative url."
-        )
+        raise ValueError(_MSG_NO_BASE)
     base = urlparse(domain_url)
     if parsed.path.startswith("/"):
         return f"{base.scheme}://{base.netloc}{parsed.path}"
@@ -72,7 +69,7 @@ def build_abs_url(scraped_url: str, domain_url: str | None = None) -> str:
             continue
         if seg == "..":
             if not segments:
-                raise ValueError("Relative link points to a path that does not exist.")
+                raise ValueError(_MSG_UNDERFLOW)
             segments.pop()
         else:
             segments.append(seg)
@@ -88,265 +85,40 @@ def build_abs_url(scraped_url: str, domain_url: str | None = None) -> str:
 # (urlparse's params handling only bites on ';'; geturl() is identity
 # for these).
 _ABS_FAST = re.compile(r"^[a-z][a-z0-9+.\-]*://[^/?#]")
-# Extract scheme://netloc from the base url.
-_BASE_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://([^/?#]*)")
-# Same plus the path (for the path-relative fast path).
-_BASE_FULL_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://([^/?#]*)([^?#;]*)$")
 # Plain path-relative ref: non-empty '/'-separated segments, no
 # scheme/query/fragment/';', no leading/trailing '/', no '//'.
 _REL_FAST = re.compile(r"^[^/?#;:\s]+(/[^/?#;:\s]+)*$")
 # A '.' or '..' segment anywhere.
 _DOT_SEG = r"(?:^|/)\.\.?(?:/|$)"
+# A scraped url or base that urlsplit rewrites or rejects: it deletes
+# tab/CR/LF anywhere and strips leading C0 controls, and it raises on a
+# netloc with an unbalanced or non-IPv6 '[...]' or a non-ASCII netloc
+# that NFKC-normalizes to a delimiter. Any C0 control, or a '[', ']' or
+# non-ASCII char in the netloc, sends the row to the scalar walk.
+_ODD_RE2 = r"[\x00-\x1f]|^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]*[\[\]\x{80}-\x{10FFFF}]"
 
 _ERR_NO_BASE = "relative url without base"
 _ERR_UNDERFLOW = "relative path underflow"
+_ERR_LABELS = {_MSG_NO_BASE: _ERR_NO_BASE, _MSG_UNDERFLOW: _ERR_UNDERFLOW}
 
 
 def _canon_scalar(scraped: str, base: str | None) -> tuple[str | None, str | None]:
     try:
         return build_abs_url(scraped, base), None
-    except ValueError as e:
-        msg = str(e)
-        if "domain url must be provided" in msg:
-            return None, _ERR_NO_BASE
-        return None, _ERR_UNDERFLOW
+    except ValueError as e:  # the reference's two errors, or urlsplit's
+        return None, _ERR_LABELS.get(str(e), f"parse error: {e}")
     except Exception as e:  # malformed beyond parse — quarantine, don't kill the wave
         return None, f"parse error: {e}"
 
 
 # Leading '../'-run + clean remainder (the vectorizable '..' case).
 _DOTS_RE2 = r"^(?P<dots>(?:\.\./)+)(?P<rest>[^/?#;:\s]+(?:/[^/?#;:\s]+)*)$"
-# Base split with named groups (RE2 / pyarrow form of the regexes above)
+# Base split with named groups: scheme://netloc, and the same plus the
+# path (for the path-relative fast paths).
 _BASE_RE2 = r"^(?P<scheme>[a-zA-Z][a-zA-Z0-9+.\-]*)://(?P<netloc>[^/?#]*)"
 _BASE_FULL_RE2 = (
     r"^(?P<scheme>[a-zA-Z][a-zA-Z0-9+.\-]*)://(?P<netloc>[^/?#]*)(?P<path>[^?#;]*)$"
 )
-
-
-def canonicalize_batch(scraped: pd.Series, base: pd.Series) -> pd.DataFrame:
-    """Vectorized canonicalization of a batch.
-
-    Returns a DataFrame with columns ``url`` (canonical absolute url or
-    None) and ``error`` (None or reason). All classification and string
-    assembly runs in pyarrow compute kernels (RE2, C++ — measured ~7x
-    the throughput of the equivalent pandas object-dtype passes); base
-    urls are factorized so parsing cost scales with DISTINCT parents,
-    not links (a page's links share one base). Fast vectorized paths:
-
-    - absolute urls → verbatim;
-    - domain-relative ('/...') with a parseable base → concat;
-    - plain path-relative → append to the base's segments (the
-      reference's non-RFC "last segment is a directory" rule);
-    - leading '../'-runs + clean remainder → pop k segments (grouped
-      rsplit), with exact underflow errors;
-
-    everything else → exact scalar walk on the residue.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    scraped = scraped.astype("object")
-    base = base.astype("object")
-    n = len(scraped)
-    out_url = np.full(n, None, dtype=object)
-    out_err = np.full(n, None, dtype=object)
-
-    sv = scraped.to_numpy()
-    is_null = scraped.isna().to_numpy()
-    s_arr = pc.fill_null(pa.Array.from_pandas(scraped), "")
-
-    def npb(arrow_bool) -> np.ndarray:
-        return pc.fill_null(arrow_bool, False).to_numpy(zero_copy_only=False)
-
-    has_semi = npb(pc.match_substring(s_arr, ";"))
-
-    # Fast path 1: absolute, verbatim-safe. geturl() is the identity for
-    # lowercase-scheme '://' urls without ';' params ambiguity; keep ';'
-    # holders on the slow path to stay bit-exact with urlparse. geturl()
-    # DROPS empty query/fragment components ('http://a/b?' → 'http://a/b',
-    # 'http://a/b?#f' → 'http://a/b#f'), so urls with a trailing '?'/'#'
-    # or a '?#' pair must take the exact scalar walk, not the verbatim path.
-    empty_component = npb(pc.match_substring_regex(s_arr, r"(\?#|[?#]$)"))
-    abs_mask = (
-        npb(pc.match_substring_regex(s_arr, _ABS_FAST.pattern))
-        & ~has_semi
-        & ~empty_component
-    )
-    abs_mask &= ~is_null
-    out_url[abs_mask] = sv[abs_mask]
-
-    # ---- base parts, computed ONCE over the distinct bases ------------
-    b_null = base.isna().to_numpy()
-    codes, uniques = pd.factorize(base.fillna(""), sort=False)
-    u_arr = pa.array(np.asarray(uniques, dtype=object), type=pa.string())
-    loose = pc.extract_regex(u_arr, _BASE_RE2)
-    full = pc.extract_regex(u_arr, _BASE_FULL_RE2)
-    loose_ok_u = npb(pc.is_valid(loose))
-    lp_scheme = pc.utf8_lower(pc.struct_field(loose, "scheme"))
-    loose_prefix_u = pc.binary_join_element_wise(
-        lp_scheme, pc.struct_field(loose, "netloc"), "://"
-    ).to_numpy(zero_copy_only=False)
-    full_path = pc.struct_field(full, "path")
-    full_ok_u = npb(pc.is_valid(full)) & ~npb(pc.match_substring(full_path, "//"))
-    full_prefix_u = pc.binary_join_element_wise(
-        pc.utf8_lower(pc.struct_field(full, "scheme")),
-        pc.struct_field(full, "netloc"),
-        "://",
-    ).to_numpy(zero_copy_only=False)
-    tail_u = pc.replace_substring_regex(
-        pc.fill_null(full_path, ""), "^/", "", max_replacements=1
-    ).to_numpy(zero_copy_only=False)
-    # reference segment model: segments = path.split('/')[1:], so a
-    # path of '' has ZERO segments but a path of '/' has ONE (empty)
-    # segment — the '' vs '/' distinction matters for both the join
-    # rule (base '/': 'x' → '…//x') and '..'-pops (base '/': one pop ok)
-    path_empty_u = npb(pc.equal(pc.fill_null(full_path, ""), ""))
-    nseg_u = (
-        pc.count_substring(pa.array(tail_u, type=pa.string()), "/")
-        .to_numpy(zero_copy_only=False)
-        .astype(np.int64)
-        + 1
-    )
-    nseg_u[path_empty_u] = 0
-    # per-row views via the factorize codes (numpy gather, no re-parse)
-    loose_ok = loose_ok_u[codes]
-    full_ok = full_ok_u[codes]
-    path_empty = path_empty_u[codes]
-    tail_rows = pa.array(tail_u[codes], type=pa.string())
-
-    # Fast path 2: domain-relative with a parseable base. The reference
-    # keeps only urlparse(scraped).path → cut at first '?' or '#'; ';'
-    # in the last segment would land in .params, so push those to slow.
-    # NB: '//host/path' is protocol-relative — urlparse puts 'host' in
-    # netloc, so the reference returns it verbatim; keep it off this
-    # fast path (slow path reproduces that).
-    dom_mask = (
-        npb(pc.starts_with(s_arr, "/"))
-        & ~npb(pc.starts_with(s_arr, "//"))
-        & ~has_semi
-        & ~abs_mask
-        & ~is_null
-    )
-    if dom_mask.any():
-        path_only = pc.struct_field(
-            pc.extract_regex(s_arr, r"^(?P<p>[^?#]*)"), "p"
-        )
-        dom_urls = pc.binary_join_element_wise(
-            pa.array(loose_prefix_u[codes], type=pa.string()), path_only, ""
-        ).to_numpy(zero_copy_only=False)
-        hit = dom_mask & loose_ok
-        out_url[hit] = dom_urls[hit]
-        no_base = dom_mask & b_null
-        out_err[no_base] = _ERR_NO_BASE
-        out_url[no_base] = None
-        # base present but unparseable by the regex → slow path
-        dom_mask = hit | no_base
-
-    # Fast path 3: plain path-relative — no leading '/', no '.'/'..'
-    # segments, no empty segments ('//' or trailing '/'), no query/
-    # fragment/';'. Reference semantics append the ref's segments to ALL
-    # of the base path's segments (the non-RFC "last segment is a
-    # directory" rule), which for clean refs is pure concatenation.
-    rel_mask = (
-        npb(pc.match_substring_regex(s_arr, _REL_FAST.pattern))
-        & ~npb(pc.match_substring_regex(s_arr, _DOT_SEG))
-        & ~abs_mask
-        & ~dom_mask
-        & ~is_null
-    )
-    if rel_mask.any():
-        # base path '' → just the ref; base path '/…' (INCLUDING bare
-        # '/', whose tail is '') → tail + '/' + ref, reproducing the
-        # reference's '…//x' for a trailing-slash root base
-        joined = pc.if_else(
-            pa.array(path_empty),
-            s_arr,
-            pc.binary_join_element_wise(tail_rows, s_arr, "/"),
-        )
-        rel_urls = pc.binary_join_element_wise(
-            pa.array(full_prefix_u[codes], type=pa.string()), joined, "/"
-        ).to_numpy(zero_copy_only=False)
-        hit = rel_mask & full_ok
-        out_url[hit] = rel_urls[hit]
-        no_base = rel_mask & b_null
-        out_err[no_base] = _ERR_NO_BASE
-        rel_mask = hit | no_base  # unparseable/odd base → slow path
-
-    # Fast path 4: a leading run of '../' then clean segments — pop one
-    # base segment per '..' (reference walk order: with all '..' leading,
-    # the pops all happen first, so popping k then appending ≡ the walk).
-    dots_mask = np.zeros(n, dtype=bool)
-    dd = pc.extract_regex(s_arr, _DOTS_RE2)
-    dd_rest = pc.struct_field(dd, "rest")
-    dd_ok = (
-        npb(pc.is_valid(dd))
-        & ~npb(pc.match_substring_regex(pc.fill_null(dd_rest, ""), _DOT_SEG))
-        & ~abs_mask
-        & ~dom_mask
-        & ~rel_mask
-        & ~is_null
-    )
-    if dd_ok.any():
-        k_rows = (
-            pc.fill_null(pc.utf8_length(pc.struct_field(dd, "dots")), 0)
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-            // 3
-        )
-        tails_np = tail_u[codes]
-        nseg = nseg_u[codes]  # 0 for path '', 1 for '/', tail '/'-count+1
-        cand = dd_ok & full_ok
-        hit = cand & (nseg >= k_rows)
-        if hit.any():
-            rest_np = pc.fill_null(dd_rest, "").to_numpy(zero_copy_only=False)
-            trimmed = np.full(n, "", dtype=object)
-            for kv in np.unique(k_rows[hit]):
-                m = hit & (k_rows == kv) & (nseg > k_rows)
-                if m.any():
-                    trimmed[m] = (
-                        pd.Series(tails_np[m]).str.rsplit("/", n=int(kv)).str[0]
-                    ).to_numpy()
-            prefix = full_prefix_u[codes]
-            t_hit, r_hit = trimmed[hit], rest_np[hit]
-            body = np.where(t_hit == "", r_hit, t_hit + "/" + r_hit)  # type: ignore[operator]
-            out_url[hit] = prefix[hit] + "/" + body
-        underflow = cand & (nseg < k_rows)
-        out_err[underflow] = _ERR_UNDERFLOW
-        no_base = dd_ok & b_null
-        out_err[no_base] = _ERR_NO_BASE
-        out_url[no_base] = None
-        dots_mask = hit | underflow | no_base
-
-    slow = ~abs_mask & ~dom_mask & ~rel_mask & ~dots_mask & ~is_null
-    if slow.any():
-        bv = base.to_numpy()
-        idx = np.flatnonzero(slow)
-        for i in idx:
-            u, e = _canon_scalar(sv[i], None if pd.isna(bv[i]) else bv[i])
-            out_url[i] = u
-            out_err[i] = e
-
-    out_err[is_null] = "null url"
-    return pd.DataFrame(
-        {"url": out_url, "error": out_err, "host": _hosts_of(out_url)}
-    )
-
-
-def _hosts_of(urls) -> np.ndarray:
-    """lower(netloc) of each output url, '' when schemeless, None when
-    the url is None — EXACTLY ``host_of_col``'s JVM semantics, computed
-    as ONE RE2 batch instead of a row-at-a-time Java regex downstream
-    (the measured 5x class, CLAUDE.md; the host ride-along removes the
-    wave's hottest remaining JVM regex)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    arr = urls if isinstance(urls, pa.Array) else pa.array(urls, type=pa.string())
-    m = pc.extract_regex(arr, r"^[A-Za-z][A-Za-z0-9+.\-]*://(?P<h>[^/?#]*)")
-    host = pc.utf8_lower(pc.struct_field(m, "h"))
-    host = pc.if_else(pc.is_null(arr), arr, pc.fill_null(host, ""))
-    return host.to_numpy(zero_copy_only=False)
-
 
 _CANON_STRUCT = T.StructType(
     [
@@ -357,33 +129,28 @@ _CANON_STRUCT = T.StructType(
 )
 
 
-@pandas_udf(_CANON_STRUCT)
-def abs_url_udf(scraped: pd.Series, base: pd.Series) -> pd.DataFrame:
-    """Arrow-batched canonicalization UDF: (scraped, base) → struct."""
-    return canonicalize_batch(scraped, base)
-
-
-# --------------------------------------------------------------------------
-# Arrow-NATIVE batch canonicalization (Spark 4.1 ``arrow_udf``).
-#
-# The pandas_udf path pays an avoidable toll at the worker boundary:
-# Spark's Arrow→pandas conversion materializes a Python str OBJECT for
-# every row of both input columns (and again for the output), and that
-# object churn is memory-bandwidth-bound — it cannot scale past the bus
-# no matter how many cores run. This variant receives the pyarrow
-# arrays DIRECTLY and keeps classification, base factorization
-# (dictionary_encode), gather, and assembly entirely inside Arrow C++;
-# Python objects are created only for the leading-'../' pop subset and
-# the scalar-walk residue. Semantics are identical to
-# ``canonicalize_batch`` (tested equal on the full case battery and by
-# hypothesis against the scalar walk).
-# --------------------------------------------------------------------------
-
-
 def canonicalize_arrow(s_in, b_in):
     """Pure-Arrow canonicalization: (scraped, base) pa.Arrays →
-    pa.StructArray{url, error}. Mirrors ``canonicalize_batch`` exactly;
-    see that docstring for the fast-path semantics."""
+    pa.StructArray{url, error, host}, equal to ``_canon_scalar`` on
+    every row, url and error.
+
+    The Arrow arrays arrive straight from the ``arrow_udf`` boundary;
+    classification, base factorization (dictionary_encode), gather and
+    assembly stay in Arrow C++, and Python objects are created only for
+    the leading-'../' pop subset and the scalar-walk residue. Fast
+    vectorized paths:
+
+    - absolute urls → verbatim;
+    - domain-relative ('/...') with a parseable base → concat;
+    - plain path-relative → append to the base's segments (the
+      reference's non-RFC "last segment is a directory" rule);
+    - leading '../'-runs + clean remainder → pop k segments (grouped
+      rsplit), with exact underflow errors;
+
+    everything else → exact scalar walk on the residue. ``host`` is
+    lower(netloc) of the output url, '' when schemeless, null when the
+    url is null — exactly ``host_of_col``'s JVM semantics, computed as
+    one RE2 batch instead of a row-at-a-time Java regex downstream."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -399,13 +166,21 @@ def canonicalize_arrow(s_in, b_in):
     def npb(arrow_bool) -> np.ndarray:
         return pc.fill_null(arrow_bool, False).to_numpy(zero_copy_only=False)
 
+    # rows eligible for a fast path: non-null, nothing urlsplit rewrites
+    fast = ~is_null & ~npb(pc.match_substring_regex(s_arr, _ODD_RE2))
+    # Fast path 1: absolute, verbatim-safe. geturl() is the identity for
+    # lowercase-scheme '://' urls without ';' params ambiguity; keep ';'
+    # holders on the slow path to stay bit-exact with urlparse. geturl()
+    # DROPS empty query/fragment components ('http://a/b?' → 'http://a/b',
+    # 'http://a/b?#f' → 'http://a/b#f'), so urls with a trailing '?'/'#'
+    # or a '?#' pair must take the exact scalar walk, not the verbatim path.
     has_semi = npb(pc.match_substring(s_arr, ";"))
     empty_component = npb(pc.match_substring_regex(s_arr, r"(\?#|[?#]$)"))
     abs_mask = (
         npb(pc.match_substring_regex(s_arr, _ABS_FAST.pattern))
         & ~has_semi
         & ~empty_component
-        & ~is_null
+        & fast
     )
 
     # ---- base parts, once per DISTINCT base via dictionary_encode ----
@@ -416,7 +191,9 @@ def canonicalize_arrow(s_in, b_in):
     u_arr = d.dictionary
     loose = pc.extract_regex(u_arr, _BASE_RE2)
     full = pc.extract_regex(u_arr, _BASE_FULL_RE2)
-    loose_ok_u = npb(pc.is_valid(loose))
+    # a base urlsplit would rewrite or reject parses only on the scalar walk
+    base_odd_u = npb(pc.match_substring_regex(u_arr, _ODD_RE2))
+    loose_ok_u = npb(pc.is_valid(loose)) & ~base_odd_u
     loose_prefix_u = pc.fill_null(
         pc.binary_join_element_wise(
             pc.utf8_lower(pc.struct_field(loose, "scheme")),
@@ -426,7 +203,11 @@ def canonicalize_arrow(s_in, b_in):
         "",
     )
     full_path = pc.struct_field(full, "path")
-    full_ok_u = npb(pc.is_valid(full)) & ~npb(pc.match_substring(full_path, "//"))
+    full_ok_u = (
+        npb(pc.is_valid(full))
+        & ~npb(pc.match_substring(full_path, "//"))
+        & ~base_odd_u
+    )
     full_prefix_u = pc.fill_null(
         pc.binary_join_element_wise(
             pc.utf8_lower(pc.struct_field(full, "scheme")),
@@ -438,6 +219,10 @@ def canonicalize_arrow(s_in, b_in):
     tail_u = pc.replace_substring_regex(
         pc.fill_null(full_path, ""), "^/", "", max_replacements=1
     )
+    # reference segment model: segments = path.split('/')[1:], so a
+    # path of '' has ZERO segments but a path of '/' has ONE (empty)
+    # segment — the '' vs '/' distinction matters for both the join
+    # rule (base '/': 'x' → '…//x') and '..'-pops (base '/': one pop ok)
     path_empty_u = npb(pc.equal(pc.fill_null(full_path, ""), ""))
     nseg_u = (
         pc.count_substring(tail_u, "/").to_numpy(zero_copy_only=False).astype(np.int64)
@@ -453,13 +238,17 @@ def canonicalize_arrow(s_in, b_in):
     loose_prefix_rows = pc.take(loose_prefix_u, codes_arr)
     full_prefix_rows = pc.take(full_prefix_u, codes_arr)
 
-    # Fast path 2: domain-relative ('/x', not '//x') with parseable base
+    # Fast path 2: domain-relative ('/x') with a parseable base. The
+    # reference keeps only urlparse(scraped).path → cut at the first '?'
+    # or '#'; ';' would land in .params, so those go slow. '//host/x' is
+    # protocol-relative (urlparse puts 'host' in netloc and the
+    # reference returns it verbatim) — the slow path reproduces that.
     dom_shape = (
         npb(pc.starts_with(s_arr, "/"))
         & ~npb(pc.starts_with(s_arr, "//"))
         & ~has_semi
         & ~abs_mask
-        & ~is_null
+        & fast
     )
     dom_hit = dom_shape & loose_ok
     dom_nobase = dom_shape & b_null
@@ -473,7 +262,7 @@ def canonicalize_arrow(s_in, b_in):
         & ~npb(pc.match_substring_regex(s_arr, _DOT_SEG))
         & ~abs_mask
         & ~dom_mask
-        & ~is_null
+        & fast
     )
     rel_hit = rel_shape & full_ok
     rel_nobase = rel_shape & b_null
@@ -499,7 +288,7 @@ def canonicalize_arrow(s_in, b_in):
         & ~abs_mask
         & ~dom_mask
         & ~rel_mask
-        & ~is_null
+        & fast
     )
     if dd_ok.any():
         k_rows = (
@@ -535,7 +324,8 @@ def canonicalize_arrow(s_in, b_in):
             obj_url[idx] = sub_prefix + "/" + body
     dots_mask = dots_hit | underflow | dots_nobase
 
-    # Scalar-walk residue (odd bases, '.' segments, ';' holders, '//x')
+    # Scalar-walk residue (odd bases, '.' segments, ';' holders, '//x',
+    # control characters, bracketed or non-ASCII netlocs)
     obj_err = np.full(n, None, dtype=object)
     slow = ~abs_mask & ~dom_mask & ~rel_mask & ~dots_mask & ~is_null
     if slow.any():
@@ -559,8 +349,8 @@ def canonicalize_arrow(s_in, b_in):
     nb = dom_nobase | rel_nobase | dots_nobase
     err = pc.if_else(pa.array(nb), pa.scalar(_ERR_NO_BASE), err)
     err = pc.if_else(is_null_a, pa.scalar("null url"), err)
-    # host ride-along: one RE2 batch over the assembled urls (see
-    # _hosts_of — ≡ host_of_col, minus the downstream Java regex)
+    # host ride-along: one RE2 batch over the assembled urls (≡
+    # host_of_col, minus the downstream Java regex)
     if isinstance(url, pa.ChunkedArray):  # pragma: no cover - defensive
         url = url.combine_chunks()
     hm = pc.extract_regex(url, r"^[A-Za-z][A-Za-z0-9+.\-]*://(?P<h>[^/?#]*)")
@@ -571,200 +361,40 @@ def canonicalize_arrow(s_in, b_in):
     )
 
 
-if arrow_udf is not None:
-
-    @arrow_udf(_CANON_STRUCT)
-    def abs_url_arrow(scraped, base):
-        """Arrow-native canonicalization UDF (pa.Array in/out)."""
-        return canonicalize_arrow(scraped, base)
-
-else:  # pragma: no cover
-    abs_url_arrow = None
-
-
-# --------------------------------------------------------------------------
-# JVM (whole-stage-codegen) fast paths — the hybrid canonicalizer.
-#
-# Measured (BENCH.md round 2): the Arrow UDF is the wave's largest
-# NON-scaling stage — ~25 s for 32M rows at local[8] AND local[32],
-# because every row's strings round-trip the Python worker pipe twice
-# regardless of core count. The three vectorizable fast paths (same
-# masks as canonicalize_batch, which is hypothesis-tested ≡ the scalar
-# walk) cover ~90% of a real link stream and are pure string exprs —
-# here they run as JVM codegen; ONLY the residue ('../'-walks, ';'
-# params, protocol-relative, odd bases) ships to Python. The JVM masks
-# are deliberately CONSERVATIVE subsets: any row they select gets the
-# bit-exact fast-path value; everything else falls through to the exact
-# batch/scalar path, so routing differences can never change results.
-# --------------------------------------------------------------------------
-
-_BIG = 1 << 30
-
-
-def _first_pos(c: Column, chars: str) -> Column:
-    """1-based position of the first occurrence of any char in
-    ``chars`` (instr-based, no regex); _BIG if none occur."""
-    out = None
-    for ch in chars:
-        p = F.instr(c, ch)
-        p = F.when(p == 0, F.lit(_BIG)).otherwise(p)
-        out = p if out is None else F.least(out, p)
-    return out
-
-
-def jvm_canon_cols(s: Column, b: Column) -> tuple[Column, Column, Column]:
-    """(handled, url, error) Columns for the codegen-expressible fast
-    paths of ``build_abs_url``. ``handled`` is null-safe (false for
-    null scraped urls).
-
-    Deliberately regex-light: Java regex evaluation per row was ~3x the
-    cost of the whole Arrow UDF (measured — the first cut of this
-    function used ~12 regex evals/row across the Filter and Project and
-    ran 86 s vs the 27 s UDF at 8M rows); everything here except three
-    short anchored patterns is instr/substring/concat codegen."""
-    has_semi = F.coalesce(s.contains(";"), F.lit(True))
-    # path 1: absolute, verbatim-safe (lowercase scheme, no ';', and no
-    # empty query/fragment component that geturl() would drop)
-    abs_ok = (
-        s.rlike(_ABS_FAST.pattern)
-        & ~has_semi
-        & ~(s.contains("?#") | s.endswith("?") | s.endswith("#"))
-    )
-
-    # ---- base parse, instr/substring only ----------------------------
-    b_null = b.isNull()
-    sep = F.instr(b, "://")
-    scheme = F.substring(b, F.lit(1), sep - 1)
-    scheme_ok = (sep > 0) & scheme.rlike(r"^[a-zA-Z][a-zA-Z0-9+.\-]*$")
-    after = F.substring(b, sep + 3, F.lit(_BIG))
-    nl_end = _first_pos(after, "/?#")
-    netloc = F.when(nl_end == _BIG, after).otherwise(
-        F.substring(after, F.lit(1), nl_end - 1)
-    )
-    prefix = F.concat(F.lower(scheme), F.lit("://"), netloc)  # loose AND full
-    # the path after netloc (only meaningful when the first delimiter is
-    # '/'; when it is '?' or '#', full_ok is false anyway)
-    f_path = F.when(nl_end == _BIG, F.lit("")).otherwise(
-        F.substring(after, nl_end, F.lit(_BIG))
-    )
-    loose_ok = scheme_ok
-    # full regex equivalent: scheme://[^/?#]*[^?#;]*$ + no '//' in path
-    # = valid scheme, no '?'/'#' anywhere, no ';' or '//' in the path
-    full_ok = (
-        scheme_ok
-        & ~b.contains("?")
-        & ~b.contains("#")
-        & ~f_path.contains(";")
-        & ~f_path.contains("//")
-    )
-    tail = F.when(
-        f_path.startswith("/"), F.substring(f_path, F.lit(2), F.lit(_BIG))
-    ).otherwise(f_path)
-    path_empty = f_path == ""
-
-    # path 2: domain-relative ('/x', not protocol-relative '//x') with a
-    # parseable base — scheme://netloc + the ref cut at the first ?/#
-    dom_shape = s.startswith("/") & ~s.startswith("//") & ~has_semi
-    dom_hit = dom_shape & ~b_null & loose_ok
-    dom_nobase = dom_shape & b_null
-    s_cut = _first_pos(s, "?#")
-    path_only = F.when(s_cut == _BIG, s).otherwise(
-        F.substring(s, F.lit(1), s_cut - 1)
-    )
-    dom_url = F.concat(prefix, path_only)
-
-    # path 3: plain path-relative (no leading '/', no ':' — so disjoint
-    # from 1 and 2 — no '.'/'..' segments, no '//', no ?/#/;/whitespace):
-    # the non-RFC "base's last segment is a directory" rule = pure
-    # concatenation (base path '' → just the ref; '/'-rooted tail ''
-    # reproduces the reference's '…//x'). Dot segments are excluded by
-    # position checks, not a second regex.
-    dot_seg = (
-        (s == ".")
-        | (s == "..")
-        | s.startswith("./")
-        | s.startswith("../")
-        | s.contains("/./")
-        | s.contains("/../")
-        | s.endswith("/.")
-        | s.endswith("/..")
-    )
-    rel_shape = s.rlike(_REL_FAST.pattern) & ~dot_seg
-    rel_hit = rel_shape & ~b_null & full_ok
-    rel_nobase = rel_shape & b_null
-    rel_url = F.concat(
-        prefix,
-        F.lit("/"),
-        F.when(path_empty, s).otherwise(F.concat(tail, F.lit("/"), s)),
-    )
-
-    handled = F.coalesce(
-        abs_ok | dom_hit | dom_nobase | rel_hit | rel_nobase, F.lit(False)
-    )
-    url = (
-        F.when(abs_ok, s)
-        .when(dom_hit, dom_url)
-        .when(rel_hit, rel_url)
-        .otherwise(F.lit(None).cast("string"))
-    )
-    err = F.when(dom_nobase | rel_nobase, F.lit(_ERR_NO_BASE)).otherwise(
-        F.lit(None).cast("string")
-    )
-    return handled, url, err
+@arrow_udf(_CANON_STRUCT)
+def abs_url_arrow(scraped, base):
+    """Arrow-native canonicalization UDF (pa.Array in/out)."""
+    return canonicalize_arrow(scraped, base)
 
 
 def with_abs_url(
     df: DataFrame,
     scraped_col: str,
     base_col: str,
-    url_out: str = "url",
-    err_out: str = "canon_error",
-    strategy: str = "arrow",
     host_out: str | None = None,
 ) -> DataFrame:
-    """Append canonical url + error columns.
-
-    ``strategy='arrow'`` (default): the batch logic Arrow-NATIVE end to
-    end (Spark 4.1 ``arrow_udf``) — no pandas object materialization at
-    the worker boundary; Python objects only for the '../'-pop subset
-    and the scalar residue. Measured ~30% faster than the pandas form
-    once the session is warm (8M rows: 3.6 s vs 5.2 s @ local[8]); the
+    """Append ``url`` (canonical absolute url or null) and
+    ``canon_error`` (null or the reason) columns, computed by
+    ``canonicalize_arrow`` through the Arrow-native ``arrow_udf`` — no
+    pandas object materialization at the worker boundary; Python
+    objects only for the '../'-pop subset and the scalar residue. The
     first arrow_udf stage of a session pays a one-time worker warmup,
     which any small warm-up batch absorbs.
-    ``strategy='udf'``: same batch logic crossing the boundary as
-    pandas Series (pyarrow RE2 kernels, bases factorized).
-    ``strategy='hybrid'``: JVM codegen fast paths + UDF residue union.
 
-    The hybrid exists as a measured NEGATIVE result (BENCH.md round 2):
-    row-at-a-time Java regex/string exprs evaluated across the
-    filter+project of each union branch ran 28.6 s for the fast branch
-    alone at 8M rows, vs 7.6 s for the ENTIRE Arrow batch — the
-    vectorized RE2 + factorized-base design beats whole-stage codegen
-    here by ~5x, so the UDF stays the default. Kept because it is
-    correctness-tested (hybrid ≡ udf on the full case battery) and
-    documents the comparison.
+    There is no pandas or JVM path: measured in BENCH.md round 2, the
+    pandas_udf form ran ~30% slower (8M rows: 5.2 s vs 3.6 s @
+    local[8]) and whole-stage-codegen fast paths ~5x slower (28.6 s for
+    the fast branch alone vs 7.6 s for the whole Arrow batch).
 
     ``host_out``: also expose the batch-computed ``host`` field
-    (== ``host_of_col(url_out)``, one RE2 batch inside the UDF) — the
+    (== ``host_of_col(url)``, one RE2 batch inside the UDF) — the
     wave's hottest remaining row-at-a-time Java regex deleted for
-    callers that need the host anyway (discover_links, the bench wave).
-    Not available under ``strategy='hybrid'`` (the JVM fast branch has
-    no struct to ride)."""
-    s, b = F.col(scraped_col), F.col(base_col)
-    if strategy == "hybrid":
-        if host_out is not None:
-            raise ValueError("host_out is not supported with strategy='hybrid'")
-        handled, url, err = jvm_canon_cols(s, b)
-        fast = df.where(handled).withColumn(url_out, url).withColumn(err_out, err)
-        slow = df.where(~handled)
-        slow = with_abs_url(slow, scraped_col, base_col, url_out, err_out, "udf")
-        return fast.unionByName(slow)
+    callers that need the host anyway (discover_links, the bench wave)."""
     tmp = "_canon_struct"
-    fn = abs_url_arrow if (strategy == "arrow" and abs_url_arrow is not None) else abs_url_udf
     out = (
-        df.withColumn(tmp, fn(F.col(scraped_col), F.col(base_col)))
-        .withColumn(url_out, F.col(f"{tmp}.url"))
-        .withColumn(err_out, F.col(f"{tmp}.error"))
+        df.withColumn(tmp, abs_url_arrow(F.col(scraped_col), F.col(base_col)))
+        .withColumn("url", F.col(f"{tmp}.url"))
+        .withColumn("canon_error", F.col(f"{tmp}.error"))
     )
     if host_out is not None:
         out = out.withColumn(host_out, F.col(f"{tmp}.host"))

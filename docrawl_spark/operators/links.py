@@ -11,7 +11,8 @@ a sliver):
    the href attribute, elements.py:61-71) — pushed inside the array so
    the explode generates only real candidates;
 2. explode → (parent doc, parent visit_rank, offset, media_ref);
-3. canonicalize against the parent doc_id (build_abs_url UDF);
+3. canonicalize against the parent doc_id (``with_abs_url``: the
+   Arrow-native ``canonicalize_arrow`` UDF, ≡ ``build_abs_url``);
 4. split: canonicalization errors → quarantine rows; good rows get
    host / host_hash / url_hash columns (JVM-side).
 """

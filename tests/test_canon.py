@@ -1,22 +1,26 @@
 """Canonicalization parity with the reference.
 
-Every assertion of docrawl/tests/test_utils.py:6-29 runs through all
-three layers: the exact scalar, the vectorized batch, and the Spark
-pandas UDF. Errors map to null url + error string in the vector paths
-(vector UDFs can't raise per-row).
+Every assertion of docrawl/tests/test_utils.py:6-29 runs through both
+layers: the exact scalar ``build_abs_url`` and the Arrow batch
+``canonicalize_arrow``, directly and as the Spark UDF behind
+``with_abs_url``. Errors map to null url + error string in the vector
+paths (vector UDFs can't raise per-row). The vector paths are checked
+against the scalar walk ``_canon_scalar`` (url AND error string), which
+shares none of their fast-path masks.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from docrawl_spark.functions.canon import (
+    _canon_scalar,
     build_abs_url,
-    canonicalize_batch,
+    canonicalize_arrow,
     host_of_col,
     normalize_seed_url_col,
     path_of_col,
@@ -55,30 +59,41 @@ def test_scalar_reference_cases():
             build_abs_url(scraped, base)
 
 
+def _arrow(rows):
+    """canonicalize_arrow over (scraped, base) rows as ONE batch →
+    [(url, error)]."""
+    out = canonicalize_arrow(
+        pa.array([s for s, _ in rows], type=pa.string()),
+        pa.array([b for _, b in rows], type=pa.string()),
+    )
+    return list(zip(out.field("url").to_pylist(), out.field("error").to_pylist()))
+
+
 def test_batch_reference_cases():
-    scraped = pd.Series([c[0] for c in REFERENCE_CASES] + [c[0] for c in ERROR_CASES])
-    base = pd.Series([c[1] for c in REFERENCE_CASES] + [c[1] for c in ERROR_CASES])
-    out = canonicalize_batch(scraped, base)
+    rows = [(s, b) for s, b, _ in REFERENCE_CASES] + ERROR_CASES
+    out = _arrow(rows)
     for i, (_, _, expected) in enumerate(REFERENCE_CASES):
-        assert out["url"][i] == expected
-        assert out["error"][i] is None
-    for j in range(len(ERROR_CASES)):
-        i = len(REFERENCE_CASES) + j
-        assert out["url"][i] is None
-        assert out["error"][i] is not None
+        assert out[i] == (expected, None)
+    for url, err in out[len(REFERENCE_CASES):]:
+        assert url is None and err is not None
 
 
 def test_batch_edge_cases():
     # protocol-relative, query/fragment dropping, params, null input
-    out = canonicalize_batch(
-        pd.Series(["//h.com/p", "/a/b?q=1#f", "/a;p", None, ""]),
-        pd.Series(["https://e.com/x", "https://e.com", "https://e.com", "https://e.com", "https://e.com/base"]),
+    out = _arrow(
+        [
+            ("//h.com/p", "https://e.com/x"),
+            ("/a/b?q=1#f", "https://e.com"),
+            ("/a;p", "https://e.com"),
+            (None, "https://e.com"),
+            ("", "https://e.com/base"),
+        ]
     )
-    assert out["url"][0] == build_abs_url("//h.com/p", "https://e.com/x")
-    assert out["url"][1] == "https://e.com/a/b"  # query+fragment dropped
-    assert out["url"][2] == build_abs_url("/a;p", "https://e.com")
-    assert out["url"][3] is None and out["error"][3] == "null url"
-    assert out["url"][4] == build_abs_url("", "https://e.com/base")
+    assert out[0][0] == build_abs_url("//h.com/p", "https://e.com/x")
+    assert out[1][0] == "https://e.com/a/b"  # query+fragment dropped
+    assert out[2][0] == build_abs_url("/a;p", "https://e.com")
+    assert out[3] == (None, "null url")
+    assert out[4][0] == build_abs_url("", "https://e.com/base")
 
 
 def test_batch_root_slash_base_cases():
@@ -94,46 +109,32 @@ def test_batch_root_slash_base_cases():
         ("../../x", "http://h/"),            # underflow (1 seg, 2 pops)
         ("../x/y", "http://h"),              # underflow (0 segs)
     ]
-    out = canonicalize_batch(
-        pd.Series([c[0] for c in cases]), pd.Series([c[1] for c in cases])
-    )
-    for i, (sc, ba) in enumerate(cases):
+    out = _arrow(cases)
+    for (sc, ba), (url, err) in zip(cases, out):
         try:
             exp_u, exp_err = build_abs_url(sc, ba), False
         except ValueError:
             exp_u, exp_err = None, True
-        assert out["url"][i] == exp_u, (sc, ba, out["url"][i], exp_u)
-        assert (out["error"][i] is not None) == exp_err, (sc, ba)
+        assert url == exp_u, (sc, ba, url, exp_u)
+        assert (err is not None) == exp_err, (sc, ba)
 
 
-@settings(max_examples=300, deadline=None)
-@given(
-    scraped=st.one_of(
-        st.sampled_from(
-            ["/a/b", "a/b", "../x", "./y", "https://z.org/q?a=1", "//cdn.z.org/i.png",
-             "", ".", "..", "a/../b", "/p?q#f", "x;y", "HTTPS://UP.com/A"]
-        ),
-        st.text(alphabet="abc/.?#:&=%", max_size=24),
-    ),
-    base=st.one_of(
-        st.none(),
-        st.sampled_from(
-            ["https://example.com", "https://example.com/", "https://example.com/aaa/bbb",
-             "http://h.io/p/", "ftp://f.net/d/e", "example.com/noscheme"]
-        ),
-    ),
-)
-def test_batch_matches_scalar(scraped, base):
-    """Property: the vectorized batch == the exact scalar, always."""
-    try:
-        expected_url, expected_err = build_abs_url(scraped, base), None
-    except ValueError:
-        expected_url, expected_err = None, "err"
-    except Exception:
-        expected_url, expected_err = None, "err"
-    out = canonicalize_batch(pd.Series([scraped]), pd.Series([base]))
-    assert out["url"][0] == expected_url
-    assert (out["error"][0] is None) == (expected_err is None)
+def test_scalar_error_labels():
+    """Only the reference's two ValueErrors get the short labels; any
+    other parse failure (urlsplit rejecting a netloc) is labelled as
+    such in quarantine.canon_error, not as a path underflow."""
+    assert _canon_scalar("../../x", "https://h.test/a") == (
+        None, "relative path underflow"
+    )
+    assert _canon_scalar("x", None) == (None, "relative url without base")
+    assert _canon_scalar("http://[::1/x", None) == (
+        None, "parse error: Invalid IPv6 URL"
+    )
+    assert _canon_scalar("x", "http://[::1/a") == (
+        None, "parse error: Invalid IPv6 URL"
+    )
+    url, err = _canon_scalar("http://a\uff0fb/x", "https://h.test/a")
+    assert url is None and err.startswith("parse error: netloc")
 
 
 @settings(max_examples=200, deadline=None)
@@ -206,60 +207,39 @@ REFS_BATTERY = [
     "a/./b", "a/../b", "x;y", "/x;y", "a?q", "a#f", "a b", " a",
     "", None, "mailto:info@x", "javascript:void(0)", "a//b", "a/",
     "x" * 300, "../" * 9 + "deep",
+    # urlsplit deletes tab/CR/LF anywhere and strips leading C0 controls
+    "/p\nq", "http://a/b\nc", "a\tb/c", "../x\r", "\x01/p",
+    # ... and rejects a netloc with a bad '[...]' or one that
+    # NFKC-normalizes to a delimiter (fullwidth solidus)
+    "http://[::1/x", "http://[zz]/x", "http://[::1]/x", "http://a／b/x",
+    "http://é.test/x",
 ]
 BASES_BATTERY = [
     "https://h.test/d1/d2/leaf", "https://h.test/", "https://h.test",
     "http://h.test/one", "HTTPS://H.test/Mixed/Case", "https://h.test/p?q=1",
     "https://h.test/p;param", "not a url", "", None, "https://h.test//dbl/p",
+    "https://h.test/a", "https://h.test/a\tb", "http://[::1/a",
+    "http://é.test/d/", "\x01https://h.test/a",
 ]
+BATTERY = [(r, b) for r in REFS_BATTERY for b in BASES_BATTERY]
 
 
-def test_hybrid_equals_udf_strategy(spark):
-    """The JVM fast paths (with_abs_url strategy='hybrid') must produce
-    exactly the all-UDF result for every (ref, base) shape: absolute
-    (incl. empty-component '?'/'#' cases), domain-relative,
-    protocol-relative, plain relative, '../'-walks incl. underflow,
-    dot segments, ';' params, query/fragment refs, null/missing base,
-    empty and null refs, whitespace, odd bases."""
-    from docrawl_spark.functions.canon import with_abs_url
-
-    rows = [(r, b) for r in REFS_BATTERY for b in BASES_BATTERY]
-    df = spark.createDataFrame(rows, "ref string, base string")
-    a = with_abs_url(df, "ref", "base", strategy="hybrid").select(
-        "ref", "base", "url", "canon_error"
-    )
-    e = with_abs_url(df, "ref", "base", strategy="udf").select(
-        "ref", "base", "url", "canon_error"
-    )
-    got = {(r["ref"], r["base"]): (r["url"], r["canon_error"]) for r in a.collect()}
-    exp = {(r["ref"], r["base"]): (r["url"], r["canon_error"]) for r in e.collect()}
-    assert set(got) == set(exp) and len(got) == len(rows)
-    diffs = {k: (got[k], exp[k]) for k in exp if got[k] != exp[k]}
-    assert not diffs, f"{len(diffs)} hybrid/udf mismatches, e.g. {list(diffs.items())[:5]}"
+def _scalar(ref, base):
+    """The reference walk's (url, error) for one row; a null ref is
+    'null url' (build_abs_url has no null input)."""
+    return (None, "null url") if ref is None else _canon_scalar(ref, base)
 
 
-def test_canonicalize_arrow_matches_batch_battery():
-    """The Arrow-native batch (canonicalize_arrow) == the pandas batch
-    on the full refs×bases battery, called DIRECTLY (no Spark) so every
-    mask interaction inside one heterogeneous batch is exercised."""
-    import pyarrow as pa
-
-    from docrawl_spark.functions.canon import canonicalize_arrow
-
-    rows = [(r, b) for r in REFS_BATTERY for b in BASES_BATTERY]
-    s = pd.Series([r for r, _ in rows], dtype=object)
-    b = pd.Series([x for _, x in rows], dtype=object)
-    expected = canonicalize_batch(s, b)
-    got = canonicalize_arrow(
-        pa.array(s, type=pa.string()), pa.array(b, type=pa.string())
-    )
-    urls = got.field("url").to_pylist()
-    errs = got.field("error").to_pylist()
-    for i, (r, base) in enumerate(rows):
-        exp_u = expected["url"][i]
-        exp_e = expected["error"][i]
-        assert urls[i] == (None if exp_u is None else exp_u), (r, base, urls[i], exp_u)
-        assert errs[i] == (None if exp_e is None else exp_e), (r, base, errs[i], exp_e)
+def test_canonicalize_arrow_matches_scalar_battery():
+    """canonicalize_arrow == the scalar walk, url AND error, on the
+    full refs×bases battery, called DIRECTLY (no Spark) as one batch so
+    every mask interaction inside a heterogeneous batch is exercised."""
+    diffs = [
+        (r, b, got, _scalar(r, b))
+        for (r, b), got in zip(BATTERY, _arrow(BATTERY))
+        if got != _scalar(r, b)
+    ]
+    assert not diffs, f"{len(diffs)} arrow/scalar mismatches, e.g. {diffs[:5]}"
 
 
 @settings(max_examples=300, deadline=None)
@@ -269,51 +249,34 @@ def test_canonicalize_arrow_matches_batch_battery():
             ["/a/b", "a/b", "../x", "./y", "https://z.org/q?a=1", "//cdn.z.org/i.png",
              "", ".", "..", "a/../b", "/p?q#f", "x;y", "HTTPS://UP.com/A"]
         ),
-        st.text(alphabet="abc/.?#:&=%", max_size=24),
+        st.text(alphabet="abc/.?#:&=%\t\n\x01[]／é", max_size=24),
     ),
     base=st.one_of(
         st.none(),
         st.sampled_from(
             ["https://example.com", "https://example.com/", "https://example.com/aaa/bbb",
-             "http://h.io/p/", "ftp://f.net/d/e", "example.com/noscheme"]
+             "http://h.io/p/", "ftp://f.net/d/e", "example.com/noscheme",
+             "https://h.test/a\tb", "http://[::1/a", "http://é.test/d/"]
         ),
     ),
 )
 def test_arrow_matches_scalar(scraped, base):
-    """Property: the Arrow-native batch == the exact scalar, always."""
-    import pyarrow as pa
-
-    from docrawl_spark.functions.canon import canonicalize_arrow
-
-    try:
-        expected_url, expected_err = build_abs_url(scraped, base), None
-    except Exception:
-        expected_url, expected_err = None, "err"
-    out = canonicalize_arrow(
-        pa.array([scraped], type=pa.string()), pa.array([base], type=pa.string())
-    )
-    assert out.field("url").to_pylist()[0] == expected_url
-    assert (out.field("error").to_pylist()[0] is None) == (expected_err is None)
+    """Property: the Arrow-native batch == the exact scalar walk, url
+    and error, always."""
+    assert _arrow([(scraped, base)]) == [_canon_scalar(scraped, base)]
 
 
-def test_arrow_strategy_equals_udf(spark):
-    """with_abs_url(strategy='arrow') (the default) == strategy='udf'
-    through Spark, over the full battery."""
-    from docrawl_spark.functions.canon import with_abs_url
-
-    rows = [(r, b) for r in REFS_BATTERY for b in BASES_BATTERY]
-    df = spark.createDataFrame(rows, "ref string, base string")
-    a = with_abs_url(df, "ref", "base", strategy="arrow").select(
-        "ref", "base", "url", "canon_error"
-    )
-    e = with_abs_url(df, "ref", "base", strategy="udf").select(
-        "ref", "base", "url", "canon_error"
-    )
-    got = {(r["ref"], r["base"]): (r["url"], r["canon_error"]) for r in a.collect()}
-    exp = {(r["ref"], r["base"]): (r["url"], r["canon_error"]) for r in e.collect()}
-    assert set(got) == set(exp) and len(got) == len(rows)
-    diffs = {k: (got[k], exp[k]) for k in exp if got[k] != exp[k]}
-    assert not diffs, f"{len(diffs)} arrow/udf mismatches, e.g. {list(diffs.items())[:5]}"
+def test_with_abs_url_matches_scalar_battery(spark):
+    """with_abs_url through Spark (the arrow_udf) == the scalar walk,
+    url AND error, over the full battery."""
+    df = spark.createDataFrame(BATTERY, "ref string, base string")
+    got = {
+        (r["ref"], r["base"]): (r["url"], r["canon_error"])
+        for r in with_abs_url(df, "ref", "base").collect()
+    }
+    assert len(got) == len(BATTERY)
+    diffs = {k: (got[k], _scalar(*k)) for k in got if got[k] != _scalar(*k)}
+    assert not diffs, f"{len(diffs)} udf/scalar mismatches, e.g. {list(diffs.items())[:5]}"
 
 
 def test_percent_normalize_rfc3986(spark):
@@ -450,11 +413,8 @@ def test_struct_host_equals_host_of_col(spark):
         ("?#", "https://h.test/a"),
     ]
     df = spark.createDataFrame(rows, "ref string, base string")
-    for strategy in ("arrow", "udf"):
-        out = with_abs_url(
-            df, "ref", "base", strategy=strategy, host_out="h_struct"
-        ).select(
-            "ref", "url", "h_struct", host_of_col("url").alias("h_jvm")
-        )
-        for r in out.collect():
-            assert r["h_struct"] == r["h_jvm"], (strategy, dict(r.asDict()))
+    out = with_abs_url(df, "ref", "base", host_out="h_struct").select(
+        "ref", "url", "h_struct", host_of_col("url").alias("h_jvm")
+    )
+    for r in out.collect():
+        assert r["h_struct"] == r["h_jvm"], dict(r.asDict())

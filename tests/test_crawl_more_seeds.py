@@ -102,6 +102,47 @@ def test_crlf_robots_blob_equality(spark, tmp_path):
     assert res.seen_urls == sim.seen
 
 
+def test_urlsplit_cleaned_links_equality(spark, tmp_path):
+    """Links that urlsplit rewrites or rejects must canonicalize as the
+    simulator's build_abs_url does: '/p\\nq' loses its LF and reaches
+    /pq, and 'http://[::1/x' (unbalanced IPv6 bracket) is a parse
+    error, quarantined and never fetched."""
+    docs_py = {
+        "https://n.test/p0": [
+            {"kind": "link", "text": "a", "media_ref": "/p\nq", "offset": 0},
+            {"kind": "link", "text": "b", "media_ref": "http://[::1/x", "offset": 1},
+        ],
+        "https://n.test/pq": [{"kind": "text", "text": "leaf", "media_ref": "", "offset": 0}],
+    }
+    hosts_py = [{"host": "n.test", "budget": 5, "robots_blob": ""}]
+    seeds_py = [{"url": "https://n.test/p0", "seed_order": 0}]
+    sim = simulate_crawl(docs_py, hosts_py, seeds_py, max_waves=3)
+    assert sim.visits == [(0, "https://n.test/p0"), (1, "https://n.test/pq")]
+
+    docs = spark.createDataFrame(
+        [
+            (u, [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans])
+            for u, spans in docs_py.items()
+        ],
+        DOCUMENTS_SCHEMA,
+    )
+    hosts = spark.createDataFrame(
+        [("n.test", 1.0, 5, "")],
+        "host string, crawl_delay double, budget int, robots_blob string",
+    )
+    seeds = spark.createDataFrame([("https://n.test/p0", 0)], SEEDS_SCHEMA)
+    wh = Warehouse(str(tmp_path / "whn"), spark)
+    res = run_crawl(
+        spark, docs, hosts, seeds, max_waves=3, warehouse=wh, collect_visits=True
+    )
+    assert res.visits == sim.visits
+    assert res.seen_urls == sim.seen
+    quarantined = wh.read("quarantine").collect()
+    assert [(r["bad_ref"], r["canon_error"]) for r in quarantined] == [
+        ("http://[::1/x", "parse error: Invalid IPv6 URL")
+    ]
+
+
 @pytest.mark.parametrize("seed", [909, 1313])
 def test_crawl_equality_dense_web_tight_budgets(spark, tmp_path, seed):
     """Heavier stress shape: denser web, more waves, and a seed list
