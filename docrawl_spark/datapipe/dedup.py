@@ -1725,7 +1725,7 @@ def host_novelty_rates(
     persist the corpus shingle set bucketed by shingle and the
     anti-join is shuffle-free on the big side (and a Bloom prefilter
     drops the obviously-old shingles before the join, exactly like
-    ``operators/dedup.build_seen_bloom`` for URLs)."""
+    ``operators/dedup.anti_join_seen``'s ``bloom=`` for URLs)."""
     new_sh = (
         new_docs.select(
             F.col(host_col).alias("host"),

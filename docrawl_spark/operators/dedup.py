@@ -6,9 +6,9 @@ The crawl wave resolves seen-ness inside its own single exchange
 NOT co-partitioned with it — recrawl/requeue checks and seen tables
 bucketed by url_hash. Two layers (SURVEY.md §4.2):
 
-- **Bloom prefilter** (optional): ``bloom_filter_agg`` over the seen
-  url_hashes → one binary blob → ``might_contain`` evaluated in the
-  candidate scan. Rows the Bloom rejects are DEFINITELY unseen and skip
+- **Bloom prefilter** (optional): ``functions/bloom.build_bloom`` over
+  the seen url_hashes → one binary blob → ``might_contain`` evaluated
+  in the candidate scan. Rows the Bloom rejects are DEFINITELY unseen and skip
   the anti-join shuffle entirely; only the might-contain fraction
   (true seen + ~fpp false positives) pays the join. The Bloom is never
   the source of truth — false positives are resolved by the exact join,
@@ -24,17 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from docrawl_spark.functions.bloom import build_bloom, might_contain_col
-
-
-def build_seen_bloom(url_seen: DataFrame, expected_items: int | None = None) -> bytes | None:
-    """Aggregate the seen-set into one Bloom blob (a few MB for 10^8
-    keys at the default fpp) for broadcast into the candidate scan.
-    Returns None for an empty seen-set."""
-    n = expected_items if expected_items is not None else url_seen.count()
-    if n == 0:
-        return None
-    return build_bloom(url_seen, "url_hash", expected_items=n)
+from docrawl_spark.functions.bloom import might_contain_col
 
 
 def anti_join_seen(

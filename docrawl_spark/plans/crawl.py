@@ -16,9 +16,13 @@ The reference's only control flow is a sequential poll loop
             building the wave runs no Spark job)
           → ONE payload rejoin (broadcast keys on url_hash + pack)
       → fetch join against the corpus                    [fetch]
-      → commit fetch_log + url_seen                      [checkpoint]
+      → commit fetch_log: the whole fetched row, the one
+        run of the wave plan                             [checkpoint]
+      → from the committed rows: visit stats, url_seen,
+        the seen-index append                            [checkpoint]
       → link discovery (array-filtered explode + canon)  [extract]
-      → commit raw candidates as next frontier + state   [checkpoint]
+      → commit quarantine + raw candidates as next
+        frontier, then crawl_state                       [checkpoint]
 
 Dedup and the seen-set anti-join run at SCHEDULE time over the skinny
 (url_hash, host_hash, pack) projection, so no corpus-sized
@@ -30,10 +34,12 @@ discovery is the same set algebra (url_seen at wave k's start ==
 url_seen after wave k-1's commit; robots/dedup/anti-join are per-url
 filters and commute with keep-first grouping).
 
-The driver iterates waves. Every wave ends in warehouse commits
-(Iceberg-snapshot semantics — see sources/storage.py), which are the
-resume points; `resume=True` continues an interrupted crawl from the
-last committed wave with identical results (tested).
+The driver iterates waves. A wave commits five warehouse tables
+(Iceberg-snapshot semantics — see sources/storage.py; the list is in
+run_crawl's docstring), crawl_state last, and every snapshot it
+commits carries its wave, so `resume=True` can discard a half-committed
+wave: a crash at any commit point resumes to identical results
+(tests/test_crawl_resume.py).
 
 Determinism: visit order is the total order (wave, parent_rank, offset,
 url_hash) — task timing can never change results (SURVEY.md §5.3).
@@ -55,7 +61,7 @@ from docrawl_spark.operators.fetch import synthetic_fetch
 from docrawl_spark.operators.links import discover_links
 from docrawl_spark.operators.scan import scan_documents
 from docrawl_spark.plans.wave import schedule_wave
-from docrawl_spark.sources.schemas import URL_SEEN_SCHEMA
+from docrawl_spark.sources.schemas import CRAWL_STATE_SCHEMA, URL_SEEN_SCHEMA
 from docrawl_spark.sources.storage import Warehouse
 
 # 2024-01-01T00:00:00Z — anchor for the deterministic fetched_at clock
@@ -119,16 +125,30 @@ def run_crawl(
 ) -> CrawlResult:
     """Run (or resume) a crawl to completion or ``max_waves``.
 
-    ``warehouse`` holds every wave's commits — fetch_log, url_seen, the
-    next frontier and crawl_state — and is the resume point; pass a
-    ``Warehouse`` over a temporary directory for a throwaway crawl.
+    ``warehouse`` holds every wave's commits and is the resume point;
+    pass a ``Warehouse`` over a temporary directory for a throwaway
+    crawl. A wave writes five tables, each snapshot tagged with the
+    wave (``warehouse.wave_commits``):
+
+    - ``fetch_log`` — the whole fetched row (the fetcher's output,
+      spans included, plus wave, visit_rank, fetched_at and
+      partition_id); the only write that runs the wave plan;
+    - ``url_seen`` — (url_hash, url, host_hash, first_wave) of the
+      committed fetch_log rows;
+    - ``quarantine`` — links whose canonicalization failed;
+    - ``frontier_pending`` — the next wave's raw candidates;
+    - ``crawl_state`` — one row per finished wave, committed last.
+
+    ``resume=True`` discards every snapshot tagged with a wave newer
+    than the last crawl_state row, then continues from that row: a
+    crash at any commit resumes to the uninterrupted crawl's results.
 
     ``seen_index``: a ``sources/seen_index.BucketedSeenIndex`` — the
     bucketed on-disk twin of url_seen. When given, each wave's
     anti-join probes the index's bucketed scan instead of re-shuffling
     the accumulated seen set (the cross-wave scan-reuse path; the index
-    is appended alongside url_seen each wave, and rebuilt from url_seen
-    on resume if missing).
+    is appended from the committed fetch_log rows each wave, and
+    rebuilt from url_seen on resume).
 
     ``collect_visits`` defaults to False: collecting the full ordered
     fetch_log to the driver is what the equality suites need at test
@@ -145,6 +165,7 @@ def run_crawl(
     `operators/transport.make_http_fetcher(...)` for a REAL HTTP crawl
     — ``documents_raw`` may then be None. Everything downstream
     (seen-set, discovery, checkpoints, resume) is fetcher-agnostic."""
+    docs_clean = None
     if fetcher is None:
         if documents_raw is None:
             raise ValueError("run_crawl needs documents_raw or a fetcher=")
@@ -152,6 +173,31 @@ def run_crawl(
 
         def fetcher(sel: DataFrame) -> DataFrame:
             return synthetic_fetch(sel, docs_clean)
+    try:
+        return _crawl_waves(
+            spark, hosts, seeds, max_waves, warehouse=warehouse,
+            n_salts=n_salts, resume=resume, collect_visits=collect_visits,
+            fetcher=fetcher, seen_index=seen_index,
+        )
+    finally:
+        if docs_clean is not None:
+            docs_clean.unpersist()
+
+
+def _crawl_waves(
+    spark: SparkSession,
+    hosts: DataFrame,
+    seeds: DataFrame,
+    max_waves: int,
+    *,
+    warehouse: Warehouse,
+    n_salts: int,
+    resume: bool,
+    collect_visits: bool,
+    fetcher,
+    seen_index,
+) -> CrawlResult:
+    """run_crawl's wave loop, with the fetch stage resolved."""
     hosts_dim = hosts.select("host", "budget", "robots_blob")
 
     metrics: list[dict] = []
@@ -161,6 +207,8 @@ def run_crawl(
             raise ValueError("resume requested but no committed crawl_state")
         state = warehouse.read("crawl_state").orderBy("wave").collect()
         last = state[-1]
+        # undo the commits of a wave that crashed before its crawl_state
+        warehouse.discard_waves_after(int(last["wave"]))
         start_wave = int(last["wave"]) + 1
         visit_base = int(last["metrics"]["visit_base_next"])
         candidates = warehouse.read("frontier_pending")
@@ -181,137 +229,117 @@ def run_crawl(
                 "the wave's salt rule"
             )
         if resume and url_seen is not None:
-            # a crash between the url_seen append and the index append
-            # can leave the index behind the truth — rebuild from the
+            # the index is not a warehouse table, so the discard above
+            # cannot undo a crashed wave's append — rebuild it from the
             # committed seen set (cheap next to a crawl wave)
             seen_index.rebuild(url_seen)
-        elif not resume and seen_index.exists():
+        elif seen_index.exists():
             seen_index.drop()
 
     for wave in range(start_wave, max_waves):
-        # the integrated skinny wave (plans/wave.schedule_wave): gate +
-        # hash-keyed dedup + seen anti-join + salted budgets + global
-        # rank, one payload rejoin — pinned to the simulator by the
-        # crawl-equality suites
-        wave_seen = url_seen
-        if (
-            seen_index is not None
-            and url_seen is not None
-            and seen_index.exists()
-        ):
-            # probe the bucketed index scan (pre-partitioned on disk)
-            # instead of re-shuffling the accumulated seen set
-            wave_seen = seen_index.frame()
-        ranked = schedule_wave(
-            candidates,
-            hosts_dim,
-            n_salts=n_salts,
-            rank_col="_wave_rank",
-            seen=wave_seen,
-        ).withColumn("visit_rank", (F.lit(visit_base) + F.col("_wave_rank")))
-        fetched = fetcher(ranked.drop("_wave_rank"))
+        # every snapshot committed in this block carries the wave tag
+        # that a resume discards if the wave never reached crawl_state
+        with warehouse.wave_commits(wave):
+            # the integrated skinny wave (plans/wave.schedule_wave):
+            # gate + hash-keyed dedup + seen anti-join + salted budgets
+            # + global rank, one payload rejoin — pinned to the
+            # simulator by the crawl-equality suites
+            wave_seen = url_seen
+            if (
+                seen_index is not None
+                and url_seen is not None
+                and seen_index.exists()
+            ):
+                # probe the bucketed index scan (pre-partitioned on
+                # disk) instead of re-shuffling the accumulated seen set
+                wave_seen = seen_index.frame()
+            ranked = schedule_wave(
+                candidates,
+                hosts_dim,
+                n_salts=n_salts,
+                rank_col="_wave_rank",
+                seen=wave_seen,
+            ).withColumn("visit_rank", (F.lit(visit_base) + F.col("_wave_rank")))
+            fetched = fetcher(ranked.drop("_wave_rank"))
 
-        # ---- commit visits (checkpoint #1) --------------------------------
-        # partition_id records which task materialized each row — the
-        # per-partition lineage half of the north_rule's
-        # "per-partition lineage + metrics"
-        # headers + cookies + json_requests + fetched_at = the
-        # reference's FULL D7 side-channel capture (headers, cookies
-        # and JSON sub-requests per page load, docrawl_core.py:
-        # 1064-1083, replayed via get_browser_cookies /
-        # get_browser_json_requests, docrawl_client.py:54-71).
-        # fetched_at is a deterministic synthetic clock (epoch anchor +
-        # visit_rank seconds) so crawl equality and oracle hashing stay
-        # reproducible; a production fetch stage records the real
-        # response time instead.
-        fetch_log_delta = fetched.select(
-            "url_hash",
-            "url",
-            "host",
-            F.lit(wave).alias("wave"),
-            "visit_rank",
-            "status",
-            "n_spans",
-            "headers",
-            "cookies",
-            "json_requests",
-            F.timestamp_seconds(
-                F.lit(_FETCH_CLOCK_EPOCH) + F.col("visit_rank")
-            ).alias("fetched_at"),
-            F.spark_partition_id().alias("partition_id"),
-        )
-        seen_delta = fetched.select(
-            "url_hash", "url", "host_hash", F.lit(wave).alias("first_wave")
-        )
-        warehouse.append("fetch_log", fetch_log_delta)
-        warehouse.append("url_seen", seen_delta)
-        warehouse.overwrite("wave_fetched", fetched)
-        fetched = warehouse.read("wave_fetched")  # truncate lineage
-        if seen_index is not None:
-            # from the committed parquet, not seen_delta — the latter
-            # would re-execute the whole wave plan
-            seen_index.append(fetched.select("url_hash", "host_hash"))
-        url_seen = warehouse.read("url_seen", empty_schema=URL_SEEN_SCHEMA)
-
-        stats = fetched.agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("status") == 404).cast("long")).alias("n404"),
-        ).first()
-        n_visited = int(stats["n"] or 0)
-        if n_visited == 0:
-            break
-        visit_base += n_visited
-
-        # ---- discover next wave -------------------------------------------
-        # raw candidates go straight to the frontier: dedup and the
-        # seen-set anti-join happen on the skinny projection at the
-        # NEXT wave's schedule (schedule_wave), so discovery itself is
-        # exchange-free — explode + canon + columnar write. The rows
-        # carry discovered_by directly (no lineage-restore join).
-        discovered = discover_links(fetched, doc_col="url")
-        quarantine = discovered.where(F.col("canon_error").isNotNull())
-        good = discovered.where(F.col("canon_error").isNull())
-        nxt = good.select(*CANDIDATE_COLS)
-
-        # ---- commit next frontier (checkpoint #2 = the resume point) ------
-        wave_metrics = {
-            "n_visited": float(n_visited),
-            "n_404": float(stats["n404"] or 0),
-            "visit_base_next": float(visit_base),
-        }
-        warehouse.append(
-            "quarantine",
-            quarantine.select(
-                "discovered_by",
-                F.col("media_ref").alias("bad_ref"),
-                "canon_error",
-                F.lit(wave).alias("wave"),
-            ),
-        )
-        warehouse.overwrite("frontier_pending", nxt)
-        candidates = warehouse.read("frontier_pending")
-        # per-partition metrics: rows fetched / 404s per task
-        warehouse.append(
-            "partition_metrics",
-            warehouse.read("fetch_log")
-            .where(F.col("wave") == wave)
-            .groupBy("partition_id")
-            .agg(
-                F.count("*").alias("n_fetched"),
-                F.sum((F.col("status") == 404).cast("long")).alias("n_404"),
+            # ---- commit the fetched wave: the ONLY run of its plan ----
+            # The whole fetched row (spans, headers, cookies,
+            # json_requests = the reference's full D7 side-channel
+            # capture, docrawl_core.py:1064-1083) plus wave,
+            # fetched_at and partition_id (which task materialized the
+            # row — the per-partition lineage; per-partition metrics are
+            # fetch_log.groupBy("wave", "partition_id")). fetched_at is a
+            # deterministic synthetic clock (epoch anchor + visit_rank
+            # seconds) so crawl equality and oracle hashing stay
+            # reproducible; a production fetch stage records the real
+            # response time instead.
+            warehouse.append(
+                "fetch_log",
+                fetched.select(
+                    "*",
+                    F.lit(wave).alias("wave"),
+                    F.timestamp_seconds(
+                        F.lit(_FETCH_CLOCK_EPOCH) + F.col("visit_rank")
+                    ).alias("fetched_at"),
+                    F.spark_partition_id().alias("partition_id"),
+                ),
             )
-            .select(
-                F.lit(wave).alias("wave"), "partition_id", "n_fetched", "n_404"
-            ),
-        )
-        warehouse.append(
-            "crawl_state",
-            spark.createDataFrame(
-                [(wave, "snap", wave_metrics)],
-                "wave int, checkpoint_id string, metrics map<string,double>",
-            ),
-        )
-        metrics.append({"wave": wave, **wave_metrics})
+            # everything below reads the committed rows back
+            fetched = warehouse.read("fetch_log").where(F.col("wave") == wave)
+            stats = fetched.agg(
+                F.count("*").alias("n"),
+                F.sum((F.col("status") == 404).cast("long")).alias("n404"),
+            ).first()
+            n_visited = int(stats["n"] or 0)
+            if n_visited == 0:
+                break
+            visit_base += n_visited
+
+            warehouse.append(
+                "url_seen",
+                fetched.select(
+                    "url_hash", "url", "host_hash", F.lit(wave).alias("first_wave")
+                ),
+            )
+            if seen_index is not None:
+                seen_index.append(fetched.select("url_hash", "host_hash"))
+            url_seen = warehouse.read("url_seen", empty_schema=URL_SEEN_SCHEMA)
+
+            # ---- discover next wave -----------------------------------
+            # raw candidates go straight to the frontier: dedup and the
+            # seen-set anti-join happen on the skinny projection at the
+            # NEXT wave's schedule (schedule_wave), so discovery itself
+            # is exchange-free — explode + canon + columnar write. The
+            # rows carry discovered_by directly (no lineage-restore
+            # join).
+            discovered = discover_links(fetched, doc_col="url")
+            quarantine = discovered.where(F.col("canon_error").isNotNull())
+            good = discovered.where(F.col("canon_error").isNull())
+            warehouse.append(
+                "quarantine",
+                quarantine.select(
+                    "discovered_by",
+                    F.col("media_ref").alias("bad_ref"),
+                    "canon_error",
+                    F.lit(wave).alias("wave"),
+                ),
+            )
+            warehouse.overwrite("frontier_pending", good.select(*CANDIDATE_COLS))
+            candidates = warehouse.read("frontier_pending")
+
+            # ---- crawl_state last: the wave's resume point ------------
+            wave_metrics = {
+                "n_visited": float(n_visited),
+                "n_404": float(stats["n404"] or 0),
+                "visit_base_next": float(visit_base),
+            }
+            warehouse.append(
+                "crawl_state",
+                spark.createDataFrame(
+                    [(wave, "snap", wave_metrics)], CRAWL_STATE_SCHEMA
+                ),
+            )
+            metrics.append({"wave": wave, **wave_metrics})
 
     # ---- final artifacts ---------------------------------------------------
     fetch_log = warehouse.read("fetch_log")

@@ -7,11 +7,13 @@ Iceberg tables") targets the real thing. This module closes the gap as
 a *readiness shim*:
 
 - :class:`IcebergWarehouse` — the identical method surface
-  (append / overwrite / merge_upsert / read(as_of) / exists /
-  snapshot_ids / compact / expire_snapshots) implemented on a real
-  Iceberg catalog via ``df.writeTo``, ``MERGE INTO``, snapshot-id time
-  travel, and the ``rewrite_data_files`` / ``expire_snapshots``
-  procedures.
+  (append / overwrite / merge_upsert / read(as_of) / exists / tables /
+  snapshot_ids / compact / expire_snapshots / wave_commits /
+  discard_waves_after) implemented on a real Iceberg catalog via
+  ``df.writeTo``, ``MERGE INTO``, snapshot-id time travel, a
+  ``docrawl.wave`` snapshot summary property, and the
+  ``rewrite_data_files`` / ``expire_snapshots`` /
+  ``rollback_to_snapshot`` procedures.
 - :func:`iceberg_available` — jar/extension detection.
 - :func:`make_warehouse` — backend selector: callers (the crawl loop,
   tests, spark-submit entrypoints) construct their warehouse through
@@ -45,6 +47,8 @@ __all__ = ["iceberg_available", "IcebergWarehouse", "make_warehouse"]
 _ICEBERG_EXTENSION = (
     "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
 )
+# snapshot summary key carrying the crawl wave (Warehouse.wave_commits)
+_WAVE_PROP = "docrawl.wave"
 
 
 def iceberg_available(spark: SparkSession, catalog: str | None = None) -> bool:
@@ -75,6 +79,7 @@ class IcebergWarehouse:
         self.catalog = catalog
         self.namespace = namespace
         self.spark = spark
+        self._wave: int | None = None
         spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}")
 
     # -- identifiers -------------------------------------------------------
@@ -90,11 +95,58 @@ class IcebergWarehouse:
         ).first()
         return str(row["snapshot_id"])
 
+    def _writer(self, table: str, df: DataFrame):
+        w = df.writeTo(self._ident(table)).using("iceberg")
+        if self._wave is not None:
+            w = w.option(f"snapshot-property.{_WAVE_PROP}", str(self._wave))
+        return w
+
+    # -- wave scope --------------------------------------------------------
+    # the parquet backend's scope: it sets self._wave, which _writer
+    # turns into the docrawl.wave summary property of every append and
+    # overwrite (merge_upsert runs SQL MERGE INTO and is not tagged)
+    wave_commits = Warehouse.wave_commits
+
+    def discard_waves_after(self, wave: int) -> dict[str, list[str]]:
+        """Roll every table back to the snapshot before its first
+        current-ancestry snapshot tagged with a wave newer than
+        ``wave`` (drop the table if that snapshot created it). Iceberg
+        history is linear, so an untagged snapshot after that point
+        cannot survive the rollback: that case raises instead of
+        losing it. Returns ``{table: [discarded ids]}``."""
+        out: dict[str, list[str]] = {}
+        for table in self.tables():
+            ident = self._ident(table)
+            snaps = self._ancestry(table)
+            first = next(
+                (i for i, s in enumerate(snaps)
+                 if s["wave"] is not None and int(s["wave"]) > wave),
+                None,
+            )
+            if first is None:
+                continue
+            dropped = snaps[first:]
+            if any(s["wave"] is None for s in dropped):
+                raise ValueError(
+                    f"{ident}: an untagged snapshot follows wave "
+                    f"{dropped[0]['wave']}'s; rolling back would lose it"
+                )
+            parent = dropped[0]["parent_id"]
+            if parent is None:
+                self.spark.sql(f"DROP TABLE {ident}")
+            else:
+                self.spark.sql(
+                    f"CALL {self.catalog}.system.rollback_to_snapshot("
+                    f"'{self.namespace}.{table}', {int(parent)})"
+                )
+            out[table] = [str(s["snapshot_id"]) for s in dropped]
+        return out
+
     # -- writes ------------------------------------------------------------
     def append(
         self, table: str, df: DataFrame, partition_by: list[str] | None = None
     ) -> str:
-        w = df.writeTo(self._ident(table)).using("iceberg")
+        w = self._writer(table, df)
         if self.exists(table):
             w.append()
         else:
@@ -110,7 +162,7 @@ class IcebergWarehouse:
     ) -> str:
         from pyspark.sql import functions as F
 
-        w = df.writeTo(self._ident(table)).using("iceberg")
+        w = self._writer(table, df)
         if partition_by and not self.exists(table):
             w = w.partitionedBy(*[F.col(c) for c in partition_by])
         w.createOrReplace()
@@ -160,14 +212,30 @@ class IcebergWarehouse:
         return sorted(before - after)
 
     # -- reads -------------------------------------------------------------
+    def tables(self) -> list[str]:
+        rows = self.spark.sql(
+            f"SHOW TABLES IN {self.catalog}.{self.namespace}"
+        ).collect()
+        return sorted(r["tableName"] for r in rows)
+
+    def _ancestry(self, table: str) -> list:
+        """(snapshot_id, parent_id, wave) of the current state's
+        ancestors in commit order — rolled-back snapshots stay in the
+        ``snapshots`` metadata table until expiry, so filter on
+        ``history.is_current_ancestor``."""
+        ident = self._ident(table)
+        return self.spark.sql(
+            f"SELECT s.snapshot_id, s.parent_id, "
+            f"s.summary['{_WAVE_PROP}'] AS wave FROM {ident}.snapshots s "
+            f"JOIN (SELECT DISTINCT snapshot_id FROM {ident}.history "
+            f"WHERE is_current_ancestor) h ON s.snapshot_id = h.snapshot_id "
+            f"ORDER BY s.committed_at, s.snapshot_id"
+        ).collect()
+
     def snapshot_ids(self, table: str) -> list[str]:
         if not self.exists(table):
             return []
-        rows = self.spark.sql(
-            f"SELECT snapshot_id FROM {self._ident(table)}.snapshots "
-            f"ORDER BY committed_at, snapshot_id"
-        ).collect()
-        return [str(r["snapshot_id"]) for r in rows]
+        return [str(r["snapshot_id"]) for r in self._ancestry(table)]
 
     def read(
         self,

@@ -67,23 +67,6 @@ HOSTS_SCHEMA = T.StructType(
     ]
 )
 
-# Frontier: production partitioning bucket(host_hash) + salt for hot
-# hosts, so politeness-window shuffles are bounded per bucket.
-FRONTIER_SCHEMA = T.StructType(
-    [
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("host_hash", T.LongType(), False),
-        T.StructField("depth", T.IntegerType(), False),
-        T.StructField("parent_rank", T.LongType(), False),
-        T.StructField("offset", T.IntegerType(), False),
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("state", T.StringType(), False),
-        T.StructField("discovered_by", T.StringType(), True),
-    ]
-)
-
 URL_SEEN_SCHEMA = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), False),
@@ -94,18 +77,6 @@ URL_SEEN_SCHEMA = T.StructType(
         # tables without the column still work — the wave derives it
         T.StructField("host_hash", T.LongType(), False),
         T.StructField("first_wave", T.IntegerType(), False),
-    ]
-)
-
-FETCH_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("visit_rank", T.LongType(), False),
-        T.StructField("status", T.IntegerType(), False),
-        T.StructField("n_spans", T.IntegerType(), False),
     ]
 )
 

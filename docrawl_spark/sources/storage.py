@@ -12,8 +12,13 @@ the same *commit semantics* on plain parquet:
 - ``read(as_of=...)`` = union of delta-dirs committed up to that
   snapshot — time travel;
 - readers never see uncommitted data (crash between write and manifest
-  rename = clean rollback), which is exactly the wave-checkpoint
-  guarantee the crawl loop needs.
+  rename = clean rollback);
+- ``wave_commits(w)`` tags every snapshot committed inside it with the
+  crawl wave ``w`` (a manifest-entry field, Iceberg's snapshot summary
+  property), and ``discard_waves_after(w)`` drops the entries tagged
+  with a newer wave from every table — so a wave whose commits span
+  several tables is undone as a whole after a crash, which is the
+  wave-checkpoint guarantee the crawl loop needs.
 
 Swapping this for real Iceberg is a constructor change, not a pipeline
 change: every caller goes through Warehouse.append/overwrite/read.
@@ -23,7 +28,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,6 +71,7 @@ class Warehouse:
     def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
+        self._wave: int | None = None
         os.makedirs(root, exist_ok=True)
 
     # -- manifest ----------------------------------------------------------
@@ -84,12 +92,56 @@ class Warehouse:
             json.dump(manifest, f)
         os.replace(tmp, p)  # atomic commit
 
+    def _commit_snapshot(self, table: str, entry: dict) -> str:
+        """Add one snapshot entry to ``table``'s manifest, tagged with
+        the open wave scope's wave (if any)."""
+        if self._wave is not None:
+            entry["wave"] = self._wave
+        m = self._load_manifest(table)
+        m["snapshots"].append(entry)
+        self._commit_manifest(table, m)
+        return entry["id"]
+
+    def _snap_path(self, table: str, snap_id: str) -> str:
+        return os.path.join(self.root, table, f"snap-{snap_id}")
+
+    # -- wave scope --------------------------------------------------------
+    @contextmanager
+    def wave_commits(self, wave: int):
+        """Tag every snapshot committed inside the block with ``wave``
+        — the crawl opens one scope per wave, so
+        :meth:`discard_waves_after` can undo a half-committed wave."""
+        prev, self._wave = self._wave, wave
+        try:
+            yield
+        finally:
+            self._wave = prev
+
+    def discard_waves_after(self, wave: int) -> dict[str, list[str]]:
+        """Drop, in every table, the snapshot entries tagged with a
+        wave newer than ``wave`` (untagged entries survive) and delete
+        their data dirs. Returns ``{table: [discarded ids]}``. As in
+        :meth:`expire_snapshots`, each manifest commits before its dirs
+        are deleted."""
+        out: dict[str, list[str]] = {}
+        for table in self.tables():
+            m = self._load_manifest(table)
+            drop = [s for s in m["snapshots"] if s.get("wave", -1) > wave]
+            if not drop:
+                continue
+            m["snapshots"] = [s for s in m["snapshots"] if s not in drop]
+            self._commit_manifest(table, m)
+            for s in drop:
+                shutil.rmtree(self._snap_path(table, s["id"]), ignore_errors=True)
+            out[table] = [s["id"] for s in drop]
+        return out
+
     # -- writes ------------------------------------------------------------
     def _write_snapshot(
         self, table: str, df: DataFrame, partition_by: list[str] | None = None
     ) -> str:
         snap_id = uuid.uuid4().hex[:12]
-        path = os.path.join(self.root, table, f"snap-{snap_id}")
+        path = self._snap_path(table, snap_id)
         w = df.write.mode("errorifexists")
         if partition_by:
             # hive-style partition dirs: reads filter on the partition
@@ -104,19 +156,13 @@ class Warehouse:
         self, table: str, df: DataFrame, partition_by: list[str] | None = None
     ) -> str:
         snap_id = self._write_snapshot(table, df, partition_by)
-        m = self._load_manifest(table)
-        m["snapshots"].append({"id": snap_id, "mode": "append"})
-        self._commit_manifest(table, m)
-        return snap_id
+        return self._commit_snapshot(table, {"id": snap_id, "mode": "append"})
 
     def overwrite(
         self, table: str, df: DataFrame, partition_by: list[str] | None = None
     ) -> str:
         snap_id = self._write_snapshot(table, df, partition_by)
-        m = self._load_manifest(table)
-        m["snapshots"].append({"id": snap_id, "mode": "overwrite"})
-        self._commit_manifest(table, m)
-        return snap_id
+        return self._commit_snapshot(table, {"id": snap_id, "mode": "overwrite"})
 
     def merge_upsert(
         self, table: str, df: DataFrame, key_cols: list[str], n_buckets: int = 16
@@ -152,18 +198,16 @@ class Warehouse:
         kept = cur.join(df.select(*key_cols), key_cols, "left_anti")
         merged = kept.unionByName(df)
         snap_id = self._write_snapshot(table, merged)
-        m = self._load_manifest(table)
-        m["snapshots"].append(
+        return self._commit_snapshot(
+            table,
             {
                 "id": snap_id,
                 "mode": "merge",
                 "key_cols": list(key_cols),
                 "n_buckets": n_buckets,
                 "buckets": affected,
-            }
+            },
         )
-        self._commit_manifest(table, m)
-        return snap_id
 
     # -- maintenance -------------------------------------------------------
     def compact(self, table: str, target_files: int = 8) -> str:
@@ -183,12 +227,9 @@ class Warehouse:
         512 MB."""
         df = self.read(table).coalesce(max(1, target_files))
         snap_id = self._write_snapshot(table, df)
-        m = self._load_manifest(table)
-        m["snapshots"].append(
-            {"id": snap_id, "mode": "overwrite", "compacted": True}
+        return self._commit_snapshot(
+            table, {"id": snap_id, "mode": "overwrite", "compacted": True}
         )
-        self._commit_manifest(table, m)
-        return snap_id
 
     def expire_snapshots(self, table: str) -> list[str]:
         """Iceberg ``expire_snapshots`` analogue: drop every manifest
@@ -198,8 +239,6 @@ class Warehouse:
         expired snapshot ids. Manifest commit happens BEFORE dir
         deletion so a crash mid-GC leaves orphan dirs (harmless,
         re-collectable), never a manifest pointing at deleted data."""
-        import shutil
-
         m = self._load_manifest(table)
         snaps = m["snapshots"]
         barrier = max(
@@ -213,12 +252,17 @@ class Warehouse:
         self._commit_manifest(table, m)
         ids = []
         for s in expired:
-            path = os.path.join(self.root, table, f"snap-{s['id']}")
-            shutil.rmtree(path, ignore_errors=True)
+            shutil.rmtree(self._snap_path(table, s["id"]), ignore_errors=True)
             ids.append(s["id"])
         return ids
 
     # -- reads -------------------------------------------------------------
+    def tables(self) -> list[str]:
+        """Names of the tables with a manifest under ``root``."""
+        return sorted(
+            t for t in os.listdir(self.root) if os.path.exists(self._mpath(t))
+        )
+
     def snapshot_ids(self, table: str) -> list[str]:
         return [s["id"] for s in self._load_manifest(table)["snapshots"]]
 
@@ -231,7 +275,12 @@ class Warehouse:
         """Current (or time-travel ``as_of`` snapshot id) table state."""
         snaps = self._load_manifest(table)["snapshots"]
         if as_of is not None:
-            idx = next(i for i, s in enumerate(snaps) if s["id"] == as_of)
+            idx = next((i for i, s in enumerate(snaps) if s["id"] == as_of), None)
+            if idx is None:
+                raise ValueError(
+                    f"table {table} has no snapshot {as_of!r} (never "
+                    "committed, expired or discarded)"
+                )
             snaps = snaps[: idx + 1]
         # replay: overwrite resets; append adds; merge adds AND masks its
         # key-buckets out of every earlier live snapshot (those buckets'
@@ -254,10 +303,10 @@ class Warehouse:
         masked = [(s, masks) for s, masks in live if masks]
         parts = []
         if unmasked:
-            paths = [os.path.join(self.root, table, f"snap-{s['id']}") for s in unmasked]
+            paths = [self._snap_path(table, s["id"]) for s in unmasked]
             parts.append(self.spark.read.parquet(*paths))
         for s, masks in masked:
-            df = self.spark.read.parquet(os.path.join(self.root, table, f"snap-{s['id']}"))
+            df = self.spark.read.parquet(self._snap_path(table, s["id"]))
             for mk in masks:
                 df = df.where(
                     ~_bucket_expr(mk["key_cols"], mk["n_buckets"]).isin(mk["buckets"])

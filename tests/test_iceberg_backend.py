@@ -43,6 +43,18 @@ def _exercise_contract(spark, wh) -> None:
     assert wh.read("t").count() == 2
     assert s3 in wh.snapshot_ids("t")
 
+    # wave scope: a discard undoes the newer wave's commits only
+    with wh.wave_commits(0):
+        kept = wh.append("w", spark.range(2).select(F.col("id")))
+    with wh.wave_commits(1):
+        wh.append("w", spark.range(5, 7).select(F.col("id")))
+        wh.overwrite("w_new", spark.range(1).select(F.col("id")))
+    assert wh.read("w").count() == 4
+    wh.discard_waves_after(0)
+    assert {r["id"] for r in wh.read("w").collect()} == {0, 1}
+    assert wh.snapshot_ids("w")[-1] == kept
+    assert not wh.exists("w_new")
+
     # empty-table schema contract
     from pyspark.sql import types as T
 

@@ -42,6 +42,49 @@ def test_empty_table_needs_schema(spark, tmp_path):
         wh.read("missing2")
 
 
+def test_unknown_snapshot_id_raises_value_error(spark, tmp_path):
+    import pytest
+
+    wh = Warehouse(str(tmp_path / "w6"), spark)
+    s1 = wh.append("t", spark.range(2).selectExpr("id"))
+    wh.overwrite("t", spark.range(3).selectExpr("id"))
+    wh.expire_snapshots("t")
+    with pytest.raises(ValueError, match=f"table t has no snapshot '{s1}'"):
+        wh.read("t", as_of=s1)
+    with pytest.raises(ValueError, match="table t has no snapshot 'nope'"):
+        wh.read("t", as_of="nope")
+
+
+def test_discard_waves_after_undoes_tagged_snapshots(spark, tmp_path):
+    """Snapshots committed in a ``wave_commits(w)`` scope carry w; a
+    discard drops, in every table, the entries of newer waves (and
+    their data dirs) while untagged entries survive."""
+    root = str(tmp_path / "w7")
+    wh = Warehouse(root, spark)
+    for w in range(3):
+        with wh.wave_commits(w):
+            wh.append("a", spark.range(w, w + 1).selectExpr("id"))
+            if w == 2:
+                wh.overwrite("b", spark.range(10).selectExpr("id"))
+    untagged = wh.append("a", spark.range(100, 101).selectExpr("id"))
+    with wh.wave_commits(2):
+        wh.append("a", spark.range(200, 201).selectExpr("id"))
+    assert wh._wave is None  # the scope closes
+    waves = [s.get("wave") for s in wh._load_manifest("a")["snapshots"]]
+    assert waves == [0, 1, 2, None, 2]
+
+    dropped = wh.discard_waves_after(1)
+    assert sorted(dropped) == ["a", "b"] and len(dropped["a"]) == 2
+    assert {r["id"] for r in wh.read("a").collect()} == {0, 1, 100}
+    assert wh.snapshot_ids("a")[-1] == untagged
+    assert not wh.exists("b") and wh.tables() == ["a", "b"]
+    for ids in dropped.values():
+        for i in ids:
+            assert not os.path.exists(os.path.join(root, "a", f"snap-{i}"))
+            assert not os.path.exists(os.path.join(root, "b", f"snap-{i}"))
+    assert wh.discard_waves_after(1) == {}
+
+
 def test_merge_upsert_semantics(spark, tmp_path):
     """MERGE INTO analogue: same-key rows are replaced, new keys
     append, and the merge lands as one atomic snapshot (time travel to
