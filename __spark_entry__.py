@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` — flagship: the frontier-scheduling pipeline (robots
-gate → salted per-host politeness budget → deterministic global visit
-order) over a URL universe derived from sf0.001.
+``entry(spark)`` — flagship: one crawl wave (``plans/wave.schedule_wave``:
+robots gate → salted per-host politeness budget → deterministic global
+visit order) over a URL universe derived from sf0.001.
 
 ``queries()`` / ``oracle_sql()`` — one entry per SQL-expressible
 sub-operator (see docrawl_spark/plans/driver_queries.py) checked
@@ -20,10 +20,14 @@ from docrawl_spark.plans import driver_queries
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: schedule a crawl wave over sf0.001-derived candidates."""
+    """Flagship: schedule one crawl wave over sf0.001-derived
+    candidates with the crawl engine's own wave,
+    ``plans/wave.schedule_wave``. Each document's url is a candidate at
+    (parent_rank = doc_id, offset 0); every host has budget 5, and the
+    hosts whose source name ends in an even digit disallow ``/doc/1``.
+    Returns (visit_rank, url, host, depth), visit_rank 0-based."""
     from docrawl_spark.functions.canon import url_hash_col
-    from docrawl_spark.operators.politeness import gate_and_select
-    from docrawl_spark.operators.ranking import with_global_rank
+    from docrawl_spark.plans.wave import schedule_wave
 
     sf_dir = "/root/testdata/sf0.001"
     urls = driver_queries._doc_urls(spark, sf_dir)
@@ -48,10 +52,9 @@ def entry(spark: SparkSession) -> DataFrame:
             ).otherwise(F.lit("")).alias("robots_blob"),
         )
     )
-    selected = gate_and_select(candidates, hosts)
-    return with_global_rank(
-        selected, ["parent_rank", "offset", "url_hash"], rank_col="visit_rank"
-    ).select("visit_rank", "url", "host", "depth")
+    return schedule_wave(candidates, hosts, rank_col="visit_rank").select(
+        "visit_rank", "url", "host", "depth"
+    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

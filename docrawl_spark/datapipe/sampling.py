@@ -386,7 +386,7 @@ def sample_k_per_group(
     reproducible across runs/engines/partitionings; keep the k
     lexicographically-smallest keys per group. Selection is the same
     two-phase salted window as the politeness budget
-    (operators/politeness.budget_topk): phase 1 bounds any hot group's
+    (operators/host_policy.budget_topk): phase 1 bounds any hot group's
     window partition to ~1/n_salts of its rows (a 10^7-doc source never
     lands in one task), phase 2 takes the exact top-k over ≤ n_salts·k
     survivors. Groups with < k rows keep everything."""

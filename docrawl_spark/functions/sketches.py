@@ -440,7 +440,7 @@ def kmv_mins(
     Scale shape: one distinct HashAggregate onto (g, h) — the only
     corpus-sized shuffle — then the SALTED two-phase top-k (phase 1
     bounds every window partition to one salt's share; phase 2 ranks
-    <= 17*k survivors per group): the operators/politeness.budget_topk
+    <= 17*k survivors per group): the operators/host_policy.budget_topk
     pattern, immune to a group holding 10^9 distinct keys."""
     h = _hash60(F.col(key_col).cast("string"))
     dg = (

@@ -29,7 +29,7 @@ Faithfulness map (reference cite per rule):
   media_ref = ``data-src`` else ``src`` (the O17 preference,
   docrawl_core.py:803); link/button media_ref = RAW href
   (absolutization happens downstream in the dataflow, canon.py);
-- DELIBERATE model split, mirroring `operators/links.discover_links`:
+- DELIBERATE model split, mirroring `operators/discovery.discover_links`:
   ``javascript:``/``mailto:`` hrefs are KEPT as link spans (the
   fixture model) and filtered at discovery time — the reference
   excludes them at scan (elements.py:68-69); both yield identical

@@ -1,17 +1,14 @@
-"""Robots gating + politeness-budget selection (SURVEY.md §2.5, §4.2).
+"""Politeness and robots operators around the crawl wave (SURVEY.md
+§2.5, §4.2): the per-row robots gate, the RFC 9309 robots evaluator,
+Crawl-delay budgets and schedules, robots caching, failure circuit
+breakers, agent-group selection, Clean-param rules, shared-IP budgets
+and delay-compliance reports.
 
-The reference has no robots handling and its politeness is the implicit
-1-op/sec sequential loop (docrawl_core.py:1088,1105); the north_rule
-generalizes both into explicit per-host policy enforced by dataflow:
-
-- robots gate: pure built-in array predicate over the broadcast hosts
-  dimension (no UDF);
-- per-host top-B selection: SKEW-SAFE two-phase salted window —
-  phase 1 ranks within (host, salt) and keeps the per-salt top-B
-  (the global per-host top-B is a subset of the union of per-salt
-  top-Bs, since dropping a row can only promote others), phase 2
-  ranks the ≤ n_salts·B survivors per host exactly. A single hot host
-  with 10^8 pending URLs never lands in one task.
+The wave's own robots gate and per-host budget selection live in
+``operators/host_policy.py``; ``robots_allowed_col`` here is that same
+gate evaluated per row, and ``robots_prefixes_col`` /
+``robots_allowed_prefixes_col`` are re-exported for callers that import
+them from this module.
 """
 
 from __future__ import annotations
@@ -20,142 +17,18 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from docrawl_spark.functions.canon import path_of_col
-
-DEFAULT_BUDGET = 2  # unknown-host budget; must match simulator.DEFAULT_BUDGET
+from docrawl_spark.operators.host_policy import (
+    robots_allowed_prefixes_col,
+    robots_prefixes_col,
+)
 
 
 def robots_allowed_col(url: Column, robots_blob: Column) -> Column:
     """True iff no non-empty newline-separated Disallow prefix in
-    ``robots_blob`` prefixes the url's path. Null/empty blob → allow."""
-    prefixes = F.filter(
-        F.split(F.coalesce(robots_blob, F.lit("")), "\r?\n"), lambda p: p != ""
-    )
-    path = path_of_col(url)
-    return ~F.exists(prefixes, lambda p: path.startswith(p))
-
-
-def robots_prefixes_col(robots_blob: Column) -> Column:
-    """The blob's non-empty Disallow-prefix array — computed ONCE PER
-    HOST on the (small) dim side instead of re-splitting the same blob
-    for every candidate row (``robots_allowed_col`` splits per row;
-    split/filter are interpreted HOFs, and at 10^7 rows/wave that work
-    is pure waste when it's a function of the ~10^4-row host dim)."""
-    return F.filter(
-        F.split(F.coalesce(robots_blob, F.lit("")), "\r?\n"), lambda p: p != ""
-    )
-
-
-def robots_allowed_prefixes_col(url: Column, prefixes: Column) -> Column:
-    """``robots_allowed_col`` against a pre-split prefix array (from
-    :func:`robots_prefixes_col` on the dim side). The ``size = 0``
-    short-circuit keeps the interpreted ``exists`` off the (typically
-    dominant) no-robots rows — CASE branches evaluate lazily, so only
-    rows of robots-bearing hosts pay the HOF. Null array (host absent
-    from the dim) → allow, matching robots_allowed_col's null-blob
-    rule. The null case short-circuits via an EXPLICIT isNull branch,
-    not `coalesce(size(NULL), 0)`: under legacy (non-ANSI) configs
-    `size(NULL)` is -1, which would skip the ==0 branch and let
-    `exists(NULL, …)` yield NULL — silently BLOCKING every
-    unknown-host candidate (ADVICE r5); the explicit form is
-    config-independent."""
-    return F.when(
-        prefixes.isNull() | (F.size(prefixes) == 0), F.lit(True)
-    ).otherwise(~F.exists(prefixes, lambda p: path_of_col(url).startswith(p)))
-
-
-def gate_and_select(
-    candidates: DataFrame,
-    hosts: DataFrame,
-    order_cols: list[str] | None = None,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Candidates (url, host, host_hash, parent_rank, offset, ...) →
-    the politeness-selected subset, with per-host budgets and robots
-    from the broadcast ``hosts`` dimension.
-
-    ``order_cols`` define the per-host priority (default: discovery
-    order (parent_rank, offset), tie-broken by url_hash for totality).
-    """
-    order_cols = order_cols or ["parent_rank", "offset", "url_hash"]
-
-    dim = hosts.select(
-        "host", F.col("budget").alias("_budget"), F.col("robots_blob").alias("_robots")
-    )
-    joined = candidates.join(F.broadcast(dim), "host", "left").withColumn(
-        "_budget", F.coalesce(F.col("_budget"), F.lit(DEFAULT_BUDGET))
-    )
-    # drop the robots blob BEFORE the windows — it can be KBs per row
-    # and would otherwise ride both politeness shuffles
-    gated = joined.where(robots_allowed_col(F.col("url"), F.col("_robots"))).drop(
-        "_robots"
-    )
-    return budget_topk(gated, order_cols, n_salts)
-
-
-def budget_topk(
-    df: DataFrame,
-    order_cols: list,
-    n_salts: int,
-    budget_dim: DataFrame | None = None,
-    salt_col: str | None = None,
-) -> DataFrame:
-    """The two-phase salted per-host budget selection over any frame
-    carrying (host_hash, url_hash, *order_cols). Shared by
-    ``gate_and_select`` (wide rows, fixture scale) and
-    ``plans/wave.schedule_wave_stages`` (payload-skinny rows, the
-    at-scale shuffle shape). ``order_cols`` entries may be names or
-    Column expressions (the wave orders on ``shiftright(_pack, 5)`` so
-    the decoded order columns never ride an exchange).
-
-    ``budget_dim``: optional ``(host_hash, _budget)`` dimension (unique
-    on host_hash). When given, ``df`` need not carry ``_budget`` — the
-    dim is broadcast-joined AFTER each window, so the budget column
-    rides NEITHER politeness exchange (8 B/row off both shuffles;
-    filters on a window's output don't reorder it, so selection is
-    identical). When None, ``df`` carries ``_budget`` (the wide path).
-
-    ``salt_col``: name of a PRE-MATERIALIZED salt column — must equal
-    ``pmod(url_hash, n_salts)`` — from a caller whose frame is already
-    hash-partitioned on (host_hash, salt) (the crawl wave): reusing the
-    caller's column lets the planner see the phase-1 window partition
-    keys match the incoming partitioning, so phase 1 runs with NO
-    exchange. When None the salt is derived here (identical values)."""
-    ordering = [
-        (F.col(c) if isinstance(c, str) else c).asc() for c in order_cols
-    ]
-
-    def _attach_budget(frame: DataFrame) -> DataFrame:
-        if budget_dim is None:
-            return frame
-        return frame.join(F.broadcast(budget_dim), "host_hash", "left").withColumn(
-            "_budget", F.coalesce(F.col("_budget"), F.lit(DEFAULT_BUDGET))
-        )
-
-    # phase 1: per-(host, salt) prefilter — bounds any single window
-    # partition to ~1/n_salts of a hot host's rows
-    if salt_col is None:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.col("url_hash"), F.lit(n_salts))
-        )
-    else:
-        salted = df.withColumnRenamed(salt_col, "_salt")
-    w1 = Window.partitionBy("host_hash", "_salt").orderBy(*ordering)
-    phase1 = (
-        _attach_budget(salted.withColumn("_rn", F.row_number().over(w1)))
-        .where(F.col("_rn") <= F.col("_budget"))
-        .drop("_rn", "_salt")
-    )
-    if budget_dim is not None:
-        # joined post-window so it skips the phase-1 exchange; drop it
-        # again so it skips the (already small) phase-2 exchange too
-        phase1 = phase1.drop("_budget")
-    # phase 2: exact per-host top-B over ≤ n_salts·B rows per host
-    w2 = Window.partitionBy("host_hash").orderBy(*ordering)
-    return (
-        _attach_budget(phase1.withColumn("_rn", F.row_number().over(w2)))
-        .where(F.col("_rn") <= F.col("_budget"))
-        .drop("_rn", "_budget")
-    )
+    ``robots_blob`` prefixes the url's path. Null/empty blob → allow.
+    The crawl wave's gate, with the blob split on the row instead of
+    once per host on the dim side."""
+    return robots_allowed_prefixes_col(url, robots_prefixes_col(robots_blob))
 
 
 def schedule_timeline(

@@ -11,9 +11,10 @@ to the Bloom (not deletable, union-only) — see functions/cuckoo.py.
 ``retire_for_recrawl`` is one atomic warehouse transaction per table:
 - url_seen ← seen MINUS retired (overwrite snapshot; time travel to
   the pre-retire state keeps working);
-- frontier_pending ← the retired urls as wave candidates
-  (parent_rank=-1, like seeds; url_hash tie-breaks ordering), so
-  ``run_crawl(resume=True)`` picks them up as the next wave;
+- frontier_pending ← the pending rows plus the retired urls as wave
+  candidates (parent_rank=-1, like seeds; url_hash tie-breaks
+  ordering), so ``run_crawl(resume=True)`` picks them up as the next
+  wave;
 - optionally, the sharded cuckoo filter drops the same keys in
   parallel (no rebuild).
 """
@@ -130,11 +131,14 @@ def _retire_rows(
     if requeue:
         cand = retired_to_candidates(retired)
         if warehouse.exists("frontier_pending"):
-            # mid-crawl retirement: keep the not-yet-visited frontier
-            # (disjoint from retired by construction — pending urls are
-            # anti-joined against url_seen every wave)
+            # mid-crawl retirement: keep every not-yet-visited frontier
+            # row. frontier_pending holds RAW candidates (a url may
+            # repeat, and may equal a retired url); the next wave's
+            # schedule_wave dedups them keep-first and anti-joins them
+            # against url_seen, and a requeued row's pack (parent_rank
+            # -1, offset 0) sorts before every discovered occurrence.
             cand = warehouse.read("frontier_pending").unionByName(cand)
-        warehouse.overwrite("frontier_pending", cand.dropDuplicates(["url_hash"]))
+        warehouse.overwrite("frontier_pending", cand)
     if cuckoo_shards is not None:
         cuckoo_shards = delete_from_sharded_cuckoo(
             cuckoo_shards, retired.select("url_hash")

@@ -2,7 +2,7 @@
 
 At 100 TB you do not recompute `GROUP BY host` rollups by rescanning
 the table after every crawl wave — you apply the wave's change-sized
-CDC delta (sources/storage.snapshot_diff) to the existing rollup:
+CDC delta (sources/cdc.snapshot_diff) to the existing rollup:
 
     new_rollup = old_rollup ⊕ adjustments(delta)
 

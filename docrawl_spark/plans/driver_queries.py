@@ -3154,7 +3154,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed, unchanged rows dropped. The incremental-recrawl feed and
     warehouse-replication primitive; pairs with
     Warehouse.read(as_of=...) to diff committed snapshots."""
-    from docrawl_spark.sources.storage import snapshot_diff
+    from docrawl_spark.sources.cdc import snapshot_diff
 
     urls = _doc_urls(spark, sf_dir).select("doc_id", "url")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3217,7 +3217,7 @@ def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         rollup_adjustments,
         rollup_from_state,
     )
-    from docrawl_spark.sources.storage import snapshot_diff
+    from docrawl_spark.sources.cdc import snapshot_diff
 
     base = _doc_urls(spark, sf_dir).select("doc_id", "url", "host", "n_chars")
     old = base.where(F.col("doc_id") % 11 != 3).select(
@@ -6538,7 +6538,7 @@ def q_warehouse_cdc_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh-key inserts — compacted to one op per key and applied to
     the base state. The batch twin of a streaming CDC sink; the
     oracle re-derives the final state relationally."""
-    from docrawl_spark.sources.storage import cdc_apply
+    from docrawl_spark.sources.cdc import cdc_apply
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.select("doc_id", F.md5("text").alias("sig"))

@@ -33,12 +33,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from docrawl_spark.functions.canon import host_of_col, url_hash_col
-from docrawl_spark.operators.links import (
+from docrawl_spark.operators.discovery import (
     _DEPTH_BITS,
     pack_order_col,
     unpack_order_cols,
 )
-from docrawl_spark.operators.politeness import (
+from docrawl_spark.operators.host_policy import (
     budget_topk,
     robots_allowed_prefixes_col,
     robots_prefixes_col,
@@ -68,7 +68,7 @@ def schedule_wave(
        filtering before grouping removes every occurrence of a
        disallowed url, never just the kept one);
     2. skinny = (url_hash, host_hash, _pack) where ``_pack`` is the
-       BIGINT keep-first order key (operators/links.pack_order_col);
+       BIGINT keep-first order key (operators/discovery.pack_order_col);
     3. one (host_hash, _salt) exchange: min-pack dedup, the seen
        anti-join and the phase-1 budget window all reuse it;
     4. phase-2 budget window + a global rank in one sorted partition
@@ -280,7 +280,7 @@ def schedule_wave_stages(
         .agg(F.min("_budget").alias("_budget"))
     )
     selected = budget_topk(
-        unseen, order_cols, n_salts, budget_dim=budget_dim, salt_col="_salt"
+        unseen, order_cols, budget_dim=budget_dim, salt_col="_salt"
     )
     # the global rank: ONE sorted partition of the ≤ Σ budgets selected
     # rows. Partitioning the window on the (constant) partition id

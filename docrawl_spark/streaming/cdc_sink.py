@@ -1,7 +1,7 @@
 """Streaming CDC sink — an ordered I/U/D changelog stream applied to
 a warehouse table, micro-batch by micro-batch.
 
-The batch operators (sources/storage.cdc_compact / cdc_apply) are the
+The batch operators (sources/cdc.cdc_compact / cdc_apply) are the
 whole algorithm; streaming is just the delivery schedule: each
 micro-batch is compacted to one final op per key, applied over the
 table's current committed state, and committed as a new snapshot.
@@ -28,7 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from docrawl_spark.sources.storage import Warehouse, cdc_apply
+from docrawl_spark.sources.cdc import cdc_apply
+from docrawl_spark.sources.storage import Warehouse
 
 
 def run_streaming_cdc_apply(

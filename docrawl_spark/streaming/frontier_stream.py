@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from docrawl_spark.operators.links import discover_links
+from docrawl_spark.operators.discovery import discover_links
 from docrawl_spark.sources.schemas import DOCUMENTS_SCHEMA
 
 

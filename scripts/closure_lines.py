@@ -68,8 +68,12 @@ def closure() -> dict[str, Path]:
     return found
 
 
+def line_count() -> int:
+    return sum(len(p.read_text().splitlines()) for p in closure().values())
+
+
 def main() -> None:
-    print(sum(len(p.read_text().splitlines()) for p in closure().values()))
+    print(line_count())
 
 
 if __name__ == "__main__":

@@ -99,14 +99,13 @@ def test_scan_kernel_is_shuffle_free(spark):
 
 
 def test_politeness_uses_broadcast_for_hosts(spark):
-    from docrawl_spark.operators.politeness import gate_and_select
+    from docrawl_spark.plans.crawl import seeds_to_candidates
+    from docrawl_spark.plans.wave import schedule_wave
 
     fx = generate_web(seed=5)
     docs_raw, hosts, seeds = fixture_to_dfs(spark, fx)
-    from docrawl_spark.plans.crawl import seeds_to_candidates
-
     cands = seeds_to_candidates(seeds)
-    plan = plan_of(gate_and_select(cands, hosts.select("host", "budget", "robots_blob")))
+    plan = plan_of(schedule_wave(cands, hosts.select("host", "budget", "robots_blob")))
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
@@ -115,14 +114,14 @@ def test_politeness_phase1_window_is_salted(spark):
     (host_hash, _salt) so a hot host's pending URLs spread over
     n_salts tasks — if the salt ever falls out of the partition spec,
     one task would hold the whole host."""
-    from docrawl_spark.operators.politeness import gate_and_select
     from docrawl_spark.plans.crawl import seeds_to_candidates
+    from docrawl_spark.plans.wave import schedule_wave
 
     fx = generate_web(seed=5)
     _, hosts, seeds = fixture_to_dfs(spark, fx)
     cands = seeds_to_candidates(seeds)
     plan = plan_of(
-        gate_and_select(cands, hosts.select("host", "budget", "robots_blob")),
+        schedule_wave(cands, hosts.select("host", "budget", "robots_blob")),
         mode="extended",
     )
     import re

@@ -118,6 +118,54 @@ def test_midcrawl_retire_preserves_pending_frontier(spark, tmp_path):
     assert res2.seen_urls == full.seen_urls
 
 
+def test_midcrawl_retire_keeps_every_pending_row(spark, tmp_path):
+    """frontier_pending holds RAW candidates: a url may repeat, and the
+    wave's keep-first dedup picks among its occurrences at schedule
+    time. Retiring an unrelated url must keep every pending row, so the
+    next wave still schedules the first occurrence (lowest
+    (parent_rank, offset)) with its own discovered_by."""
+    from docrawl_spark.functions.canon import host_of_col
+    from docrawl_spark.plans.wave import schedule_wave
+
+    def candidates(rows):
+        return spark.createDataFrame(
+            rows, "url string, parent_rank long, offset int, discovered_by string"
+        ).select(
+            url_hash_col("url").alias("url_hash"),
+            "url",
+            host_of_col("url").alias("host"),
+            url_hash_col(host_of_col("url")).alias("host_hash"),
+            F.lit(1).alias("depth"),
+            "parent_rank",
+            "offset",
+            "discovered_by",
+        )
+
+    x, y = "https://b.test/x", "https://a.test/y"
+    wh = Warehouse(str(tmp_path / "wh"), spark)
+    wh.overwrite("frontier_pending", candidates([(x, 9, 3, "p9"), (x, 2, 1, "p2")]))
+    wh.overwrite(
+        "url_seen",
+        candidates([(y, 0, 0, None)]).select(
+            "url_hash", "url", "host_hash", F.lit(0).alias("first_wave")
+        ),
+    )
+    n, _ = retire_for_recrawl(wh, F.col("url") == y)
+    assert n == 1
+    pending = wh.read("frontier_pending")
+    assert sorted(
+        (r["url"], r["parent_rank"], r["offset"], r["discovered_by"] or "")
+        for r in pending.collect()
+    ) == [(y, -1, 0, ""), (x, 2, 1, "p2"), (x, 9, 3, "p9")]
+
+    no_hosts = spark.createDataFrame([], "host string, budget int, robots_blob string")
+    wave = schedule_wave(pending, no_hosts, seen=wh.read("url_seen"))
+    assert {
+        r["url"]: (r["parent_rank"], r["offset"], r["discovered_by"])
+        for r in wave.collect()
+    } == {x: (2, 1, "p2"), y: (-1, 0, None)}
+
+
 def test_sitemap_lastmod_drives_recrawl(spark, tmp_path):
     """End-to-end sitemap-freshness loop: crawl to exhaustion → ingest a
     sitemap whose <lastmod> post-dates the fetch for SOME visited urls

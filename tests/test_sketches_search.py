@@ -194,7 +194,7 @@ def test_incremental_rollup_equals_recompute(spark):
         rollup_adjustments,
         rollup_from_state,
     )
-    from docrawl_spark.sources.storage import snapshot_diff
+    from docrawl_spark.sources.cdc import snapshot_diff
 
     old = spark.createDataFrame(
         [("h1", "u1", 10), ("h1", "u2", 20), ("h2", "u3", 30)],
@@ -250,7 +250,7 @@ def test_cms_estimate_broadcasts_counters(spark):
 def test_snapshot_diff_single_key_join(spark):
     """CDC diff is ONE full-outer join on the key — no window, no
     cartesian, nothing driver-side."""
-    from docrawl_spark.sources.storage import snapshot_diff
+    from docrawl_spark.sources.cdc import snapshot_diff
 
     old = spark.range(1000).selectExpr(
         "CAST(id AS STRING) AS url", "md5(CAST(id AS STRING)) AS sig"

@@ -991,7 +991,8 @@ def test_streaming_cdc_apply_equals_batch_apply(spark, tmp_path):
     the warehouse in exactly the state of one batch cdc_apply over the
     concatenated log (prefix-equivalence), with deletes applied and
     last-wins respected across epochs."""
-    from docrawl_spark.sources.storage import Warehouse, cdc_apply
+    from docrawl_spark.sources.cdc import cdc_apply
+    from docrawl_spark.sources.storage import Warehouse
     from docrawl_spark.streaming.cdc_sink import run_streaming_cdc_apply
 
     wh = Warehouse(str(tmp_path / "wh"), spark)

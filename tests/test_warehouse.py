@@ -178,7 +178,8 @@ def test_merge_upsert_rejects_bad_source(spark, tmp_path):
 def test_snapshot_diff_over_time_travel(spark, tmp_path):
     """CDC between two committed snapshots via read(as_of=...): the
     diff classifies exactly the rows the second commit touched."""
-    from docrawl_spark.sources.storage import Warehouse, snapshot_diff
+    from docrawl_spark.sources.cdc import snapshot_diff
+    from docrawl_spark.sources.storage import Warehouse
 
     wh = Warehouse(str(tmp_path / "wh"), spark)
     s1 = wh.overwrite(
@@ -208,7 +209,7 @@ def test_snapshot_diff_over_time_travel(spark, tmp_path):
 def test_snapshot_diff_null_safe_compare(spark):
     """NULL compare values: NULL==NULL is unchanged (dropped);
     NULL -> value and value -> NULL are 'changed'."""
-    from docrawl_spark.sources.storage import snapshot_diff
+    from docrawl_spark.sources.cdc import snapshot_diff
 
     old = spark.createDataFrame(
         [("a", None), ("b", None), ("c", "x")], "url string, sig string"
@@ -318,7 +319,7 @@ def test_training_shard_export_deterministic(spark, tmp_path):
 
 
 def _cdc(spark, base_rows, chg_rows):
-    from docrawl_spark.sources.storage import cdc_apply
+    from docrawl_spark.sources.cdc import cdc_apply
 
     base = spark.createDataFrame(base_rows, "k long, v string")
     chg = spark.createDataFrame(chg_rows, "k long, v string, op string, seq int")
@@ -346,7 +347,7 @@ def test_cdc_apply_tombstone_wins_equal_seq_and_idempotent(spark):
     got = _cdc(spark, base, chg)
     assert got == {2: "b"}
     # replaying the same log over the resulting state changes nothing
-    from docrawl_spark.sources.storage import cdc_apply
+    from docrawl_spark.sources.cdc import cdc_apply
 
     base_df = spark.createDataFrame(base, "k long, v string")
     chg_df = spark.createDataFrame(chg, "k long, v string, op string, seq int")

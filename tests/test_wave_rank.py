@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from docrawl_spark.functions.canon import host_of_col, url_hash_col
-from docrawl_spark.operators.links import _DEPTH_BITS
+from docrawl_spark.operators.discovery import _DEPTH_BITS
 from docrawl_spark.operators.ranking import with_global_rank
 from docrawl_spark.plans.wave import schedule_wave, schedule_wave_stages
 
