@@ -12,7 +12,6 @@ from docrawl_spark.functions.canon import (  # noqa: F401
     abs_url_arrow,
     build_abs_url,
     canonicalize_arrow,
-    dedup_normalize_url_col,
     host_of_col,
     normalize_seed_url_col,
     url_hash_col,

@@ -23,11 +23,15 @@ in the url.
 There is one Spark-facing implementation, ``canonicalize_arrow`` behind
 the Arrow-native ``abs_url_arrow`` UDF: classification + assembly run
 in pyarrow compute kernels (RE2, C++), base urls are parsed once per
-DISTINCT parent via dictionary encoding, and leading-'../' refs are
-resolved by grouped segment-popping; only the odd residue ('.'
-segments, malformed bases, ';' holders, control characters, bracketed
-or non-ASCII netlocs) falls back to the exact scalar walk
+DISTINCT parent via dictionary encoding, and a path-relative ref with
+k leading '../' cuts the base path's last k segments with one Arrow
+regex replace per distinct k; only the odd residue ('.' segments,
+malformed bases, ';' holders, control characters, bracketed or
+non-ASCII netlocs) falls back to the exact scalar walk
 (``_canon_scalar``), still inside one Arrow batch.
+
+The URL normalization keys beyond the reference (dedup, percent
+encoding, SURT) live in ``functions/url_normalize``.
 """
 
 from __future__ import annotations
@@ -36,7 +40,6 @@ import re
 from urllib.parse import urlparse
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -85,9 +88,10 @@ def build_abs_url(scraped_url: str, domain_url: str | None = None) -> str:
 # (urlparse's params handling only bites on ';'; geturl() is identity
 # for these).
 _ABS_FAST = re.compile(r"^[a-z][a-z0-9+.\-]*://[^/?#]")
-# Plain path-relative ref: non-empty '/'-separated segments, no
-# scheme/query/fragment/';', no leading/trailing '/', no '//'.
-_REL_FAST = re.compile(r"^[^/?#;:\s]+(/[^/?#;:\s]+)*$")
+# Path-relative ref: a leading run of k '../' (k >= 0) + a non-empty
+# remainder of non-empty '/'-separated segments, no scheme/query/
+# fragment/';'/whitespace.
+_REL_RE2 = r"^(?P<dots>(?:\.\./)*)(?P<rest>[^/?#;:\s]+(?:/[^/?#;:\s]+)*)$"
 # A '.' or '..' segment anywhere.
 _DOT_SEG = r"(?:^|/)\.\.?(?:/|$)"
 # A scraped url or base that urlsplit rewrites or rejects: it deletes
@@ -96,6 +100,12 @@ _DOT_SEG = r"(?:^|/)\.\.?(?:/|$)"
 # that NFKC-normalizes to a delimiter. Any C0 control, or a '[', ']' or
 # non-ASCII char in the netloc, sends the row to the scalar walk.
 _ODD_RE2 = r"[\x00-\x1f]|^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]*[\[\]\x{80}-\x{10FFFF}]"
+# Base split: scheme://netloc, the path up to the first '?', '#' or
+# ';', and whatever follows (empty for a plain base).
+_BASE_RE2 = (
+    r"^(?P<scheme>[a-zA-Z][a-zA-Z0-9+.\-]*)://(?P<netloc>[^/?#]*)"
+    r"(?P<path>[^?#;]*)(?P<more>(?s:.*))$"
+)
 
 _ERR_NO_BASE = "relative url without base"
 _ERR_UNDERFLOW = "relative path underflow"
@@ -110,15 +120,6 @@ def _canon_scalar(scraped: str, base: str | None) -> tuple[str | None, str | Non
     except Exception as e:  # malformed beyond parse — quarantine, don't kill the wave
         return None, f"parse error: {e}"
 
-
-# Leading '../'-run + clean remainder (the vectorizable '..' case).
-_DOTS_RE2 = r"^(?P<dots>(?:\.\./)+)(?P<rest>[^/?#;:\s]+(?:/[^/?#;:\s]+)*)$"
-# Base split with named groups: scheme://netloc, and the same plus the
-# path (for the path-relative fast paths).
-_BASE_RE2 = r"^(?P<scheme>[a-zA-Z][a-zA-Z0-9+.\-]*)://(?P<netloc>[^/?#]*)"
-_BASE_FULL_RE2 = (
-    r"^(?P<scheme>[a-zA-Z][a-zA-Z0-9+.\-]*)://(?P<netloc>[^/?#]*)(?P<path>[^?#;]*)$"
-)
 
 _CANON_STRUCT = T.StructType(
     [
@@ -135,17 +136,17 @@ def canonicalize_arrow(s_in, b_in):
     every row, url and error.
 
     The Arrow arrays arrive straight from the ``arrow_udf`` boundary;
-    classification, base factorization (dictionary_encode), gather and
-    assembly stay in Arrow C++, and Python objects are created only for
-    the leading-'../' pop subset and the scalar-walk residue. Fast
+    classification, base parsing (once per distinct base via
+    dictionary_encode), gather and assembly stay in Arrow C++, and
+    Python objects are created only for the scalar-walk residue. Fast
     vectorized paths:
 
     - absolute urls → verbatim;
     - domain-relative ('/...') with a parseable base → concat;
-    - plain path-relative → append to the base's segments (the
-      reference's non-RFC "last segment is a directory" rule);
-    - leading '../'-runs + clean remainder → pop k segments (grouped
-      rsplit), with exact underflow errors;
+    - path-relative, k leading '../' + clean remainder (k >= 0) → cut
+      the base's last k segments and append the remainder (the
+      reference's non-RFC "last segment is a directory" rule), with
+      exact underflow errors;
 
     everything else → exact scalar walk on the residue. ``host`` is
     lower(netloc) of the output url, '' when schemeless, null when the
@@ -189,54 +190,31 @@ def canonicalize_arrow(s_in, b_in):
     codes_arr = d.indices
     codes = codes_arr.to_numpy(zero_copy_only=False).astype(np.int64)
     u_arr = d.dictionary
-    loose = pc.extract_regex(u_arr, _BASE_RE2)
-    full = pc.extract_regex(u_arr, _BASE_FULL_RE2)
-    # a base urlsplit would rewrite or reject parses only on the scalar walk
-    base_odd_u = npb(pc.match_substring_regex(u_arr, _ODD_RE2))
-    loose_ok_u = npb(pc.is_valid(loose)) & ~base_odd_u
-    loose_prefix_u = pc.fill_null(
+    parts = pc.extract_regex(u_arr, _BASE_RE2)
+    path_u = pc.fill_null(pc.struct_field(parts, "path"), "")
+    # a base urlsplit would rewrite or reject parses only on the scalar
+    # walk; a valid match is enough for the domain-relative join, the
+    # path-relative walk also needs nothing after the path and no '//'
+    base_ok_u = npb(pc.is_valid(parts)) & ~npb(
+        pc.match_substring_regex(u_arr, _ODD_RE2)
+    )
+    plain_u = (
+        base_ok_u
+        & npb(pc.equal(pc.struct_field(parts, "more"), ""))
+        & ~npb(pc.match_substring(path_u, "//"))
+    )
+    prefix_u = pc.fill_null(
         pc.binary_join_element_wise(
-            pc.utf8_lower(pc.struct_field(loose, "scheme")),
-            pc.struct_field(loose, "netloc"),
+            pc.utf8_lower(pc.struct_field(parts, "scheme")),
+            pc.struct_field(parts, "netloc"),
             "://",
         ),
         "",
-    )
-    full_path = pc.struct_field(full, "path")
-    full_ok_u = (
-        npb(pc.is_valid(full))
-        & ~npb(pc.match_substring(full_path, "//"))
-        & ~base_odd_u
-    )
-    full_prefix_u = pc.fill_null(
-        pc.binary_join_element_wise(
-            pc.utf8_lower(pc.struct_field(full, "scheme")),
-            pc.struct_field(full, "netloc"),
-            "://",
-        ),
-        "",
-    )
-    tail_u = pc.replace_substring_regex(
-        pc.fill_null(full_path, ""), "^/", "", max_replacements=1
     )
     # reference segment model: segments = path.split('/')[1:], so a
     # path of '' has ZERO segments but a path of '/' has ONE (empty)
-    # segment — the '' vs '/' distinction matters for both the join
-    # rule (base '/': 'x' → '…//x') and '..'-pops (base '/': one pop ok)
-    path_empty_u = npb(pc.equal(pc.fill_null(full_path, ""), ""))
-    nseg_u = (
-        pc.count_substring(tail_u, "/").to_numpy(zero_copy_only=False).astype(np.int64)
-        + 1
-    )
-    nseg_u[path_empty_u] = 0
-    # per-row views: numpy gather for the bool/int vectors, Arrow take
-    # for the string columns (zero Python objects)
-    loose_ok = loose_ok_u[codes]
-    full_ok = full_ok_u[codes]
-    path_empty = path_empty_u[codes]
-    tail_rows = pc.take(tail_u, codes_arr)
-    loose_prefix_rows = pc.take(loose_prefix_u, codes_arr)
-    full_prefix_rows = pc.take(full_prefix_u, codes_arr)
+    # segment — one per '/' of the path
+    nseg_u = pc.count_substring(path_u, "/").to_numpy(zero_copy_only=False)
 
     # Fast path 2: domain-relative ('/x') with a parseable base. The
     # reference keeps only urlparse(scraped).path → cut at the first '?'
@@ -250,84 +228,59 @@ def canonicalize_arrow(s_in, b_in):
         & ~abs_mask
         & fast
     )
-    dom_hit = dom_shape & loose_ok
+    dom_hit = dom_shape & base_ok_u[codes]
     dom_nobase = dom_shape & b_null
     dom_mask = dom_hit | dom_nobase  # unparseable non-null base → slow
     path_only = pc.struct_field(pc.extract_regex(s_arr, r"^(?P<p>[^?#]*)"), "p")
-    dom_urls = pc.binary_join_element_wise(loose_prefix_rows, path_only, "")
+    dom_urls = pc.binary_join_element_wise(pc.take(prefix_u, codes_arr), path_only, "")
 
-    # Fast path 3: plain path-relative (clean segments) → concatenation
+    # Fast path 3: path-relative, k leading '../' + a remainder without
+    # '.'/'..' segments. All k pops precede the appends, so the walk
+    # underflows iff k > nseg, and otherwise keeps the base path minus
+    # its last k segments: prefix + that path + '/' + remainder.
+    rel = pc.extract_regex(s_arr, _REL_RE2)
+    rest = pc.struct_field(rel, "rest")
     rel_shape = (
-        npb(pc.match_substring_regex(s_arr, _REL_FAST.pattern))
-        & ~npb(pc.match_substring_regex(s_arr, _DOT_SEG))
-        & ~abs_mask
-        & ~dom_mask
+        npb(pc.is_valid(rel))
+        & ~npb(pc.match_substring_regex(rest, _DOT_SEG))
         & fast
     )
-    rel_hit = rel_shape & full_ok
+    k = (
+        pc.fill_null(pc.utf8_length(pc.struct_field(rel, "dots")), 0)
+        .to_numpy(zero_copy_only=False)
+        // 3
+    )
+    rel_cand = rel_shape & plain_u[codes]
+    underflow = rel_cand & (k > nseg_u[codes])
+    # RE2 rejects a counted repetition above 1000, so deeper cuts take
+    # the scalar walk
+    rel_hit = rel_cand & ~underflow & (k <= 1000)
     rel_nobase = rel_shape & b_null
-    rel_mask = rel_hit | rel_nobase
-    joined = pc.if_else(
-        pa.array(path_empty),
-        s_arr,
-        pc.binary_join_element_wise(tail_rows, s_arr, "/"),
-    )
-    rel_urls = pc.binary_join_element_wise(full_prefix_rows, joined, "/")
-
-    # Fast path 4: leading '../'-run — pop k base segments. Object work
-    # bounded to the HIT subset (take → rsplit → scatter).
-    obj_url = np.full(n, None, dtype=object)
-    dots_hit = np.zeros(n, dtype=bool)
-    underflow = np.zeros(n, dtype=bool)
-    dots_nobase = np.zeros(n, dtype=bool)
-    dd = pc.extract_regex(s_arr, _DOTS_RE2)
-    dd_rest = pc.struct_field(dd, "rest")
-    dd_ok = (
-        npb(pc.is_valid(dd))
-        & ~npb(pc.match_substring_regex(pc.fill_null(dd_rest, ""), _DOT_SEG))
-        & ~abs_mask
-        & ~dom_mask
-        & ~rel_mask
-        & fast
-    )
-    if dd_ok.any():
-        k_rows = (
-            pc.fill_null(pc.utf8_length(pc.struct_field(dd, "dots")), 0)
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-            // 3
-        )
-        nseg = nseg_u[codes]
-        cand = dd_ok & full_ok
-        dots_hit = cand & (nseg >= k_rows)
-        underflow = cand & (nseg < k_rows)
-        dots_nobase = dd_ok & b_null
-        if dots_hit.any():
-            idx = np.flatnonzero(dots_hit)
-            take_idx = pa.array(idx)
-            sub_tails = pc.take(tail_rows, take_idx).to_numpy(zero_copy_only=False)
-            sub_rest = pc.take(pc.fill_null(dd_rest, ""), take_idx).to_numpy(
-                zero_copy_only=False
+    rel_mask = rel_hit | underflow | rel_nobase
+    # one cut of the distinct bases per distinct k, then one gather
+    ks = np.union1d([0], k[rel_hit])
+    heads_u = pa.concat_arrays(
+        [
+            pc.binary_join_element_wise(
+                prefix_u,
+                pc.replace_substring_regex(path_u, f"(?:/[^/]*){{{kv}}}$", "")
+                if kv
+                else path_u,
+                "",
             )
-            sub_prefix = pc.take(full_prefix_rows, take_idx).to_numpy(
-                zero_copy_only=False
-            )
-            sub_k, sub_nseg = k_rows[idx], nseg[idx]
-            trimmed = np.full(len(idx), "", dtype=object)
-            for kv in np.unique(sub_k):
-                m = (sub_k == kv) & (sub_nseg > kv)
-                if m.any():
-                    trimmed[m] = (
-                        pd.Series(sub_tails[m]).str.rsplit("/", n=int(kv)).str[0]
-                    ).to_numpy()
-            body = np.where(trimmed == "", sub_rest, trimmed + "/" + sub_rest)  # type: ignore[operator]
-            obj_url[idx] = sub_prefix + "/" + body
-    dots_mask = dots_hit | underflow | dots_nobase
+            for kv in ks
+        ]
+    )
+    head_idx = np.where(rel_hit, np.searchsorted(ks, k), 0) * len(u_arr) + codes
+    rel_urls = pc.binary_join_element_wise(
+        pc.take(heads_u, pa.array(head_idx)), rest, "/"
+    )
 
     # Scalar-walk residue (odd bases, '.' segments, ';' holders, '//x',
     # control characters, bracketed or non-ASCII netlocs)
+    obj_url = np.full(n, None, dtype=object)
     obj_err = np.full(n, None, dtype=object)
-    slow = ~abs_mask & ~dom_mask & ~rel_mask & ~dots_mask & ~is_null
+    slow = ~abs_mask & ~dom_mask & ~rel_mask & ~is_null
     if slow.any():
         idx = np.flatnonzero(slow)
         take_idx = pa.array(idx)
@@ -346,7 +299,7 @@ def canonicalize_arrow(s_in, b_in):
     url = pc.if_else(is_null_a, pa.scalar(None, pa.string()), url)
     err = pa.array(obj_err, type=pa.string())
     err = pc.if_else(pa.array(underflow), pa.scalar(_ERR_UNDERFLOW), err)
-    nb = dom_nobase | rel_nobase | dots_nobase
+    nb = dom_nobase | rel_nobase
     err = pc.if_else(pa.array(nb), pa.scalar(_ERR_NO_BASE), err)
     err = pc.if_else(is_null_a, pa.scalar("null url"), err)
     # host ride-along: one RE2 batch over the assembled urls (≡
@@ -377,9 +330,9 @@ def with_abs_url(
     ``canon_error`` (null or the reason) columns, computed by
     ``canonicalize_arrow`` through the Arrow-native ``arrow_udf`` — no
     pandas object materialization at the worker boundary; Python
-    objects only for the '../'-pop subset and the scalar residue. The
-    first arrow_udf stage of a session pays a one-time worker warmup,
-    which any small warm-up batch absorbs.
+    objects only for the scalar residue. The first arrow_udf stage of a
+    session pays a one-time worker warmup, which any small warm-up
+    batch absorbs.
 
     There is no pandas or JVM path: measured in BENCH.md round 2, the
     pandas_udf form ran ~30% slower (8M rows: 5.2 s vs 3.6 s @
@@ -428,46 +381,6 @@ def path_of_col(url: Column | str) -> Column:
     return F.regexp_extract(c, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]*([^?#]*)", 1)
 
 
-# Unambiguous click-tracking params ONLY. 'ref' is deliberately NOT
-# here: ?ref= is frequently content-selecting (branch refs, product
-# refs) — collapsing it would permanently skip distinct pages.
-_TRACKING_PARAM_RE = r"^(utm_[^=]*|fbclid|gclid|msclkid|mc_eid|igshid)="
-
-
-def dedup_normalize_url_col(url: Column | str) -> Column:
-    """URL normalization for the seen-set / dedup key (beyond the
-    reference's build_abs_url): drop the fragment, strip tracking
-    query params (utm_*, fbclid, gclid, msclkid, mc_eid, igshid),
-    sort the surviving params (param order never changes the
-    resource), lowercase scheme+host, and drop a now-empty '?'.
-
-    Two URLs that differ only in click-tracking noise map to one
-    frontier key — at crawl scale this collapses a large fraction of
-    social/newsletter inlinks. Pure JVM exprs: the per-row arrays are
-    a handful of params, so the interpreted array filter/sort is
-    negligible next to a shuffle (the explode→agg reshape only pays
-    off for big arrays — BENCH.md's HOF lesson is about 100+-element
-    hash pipelines, not 3-element param lists)."""
-    c = F.col(url) if isinstance(url, str) else url
-    no_frag = F.regexp_extract(c, r"^([^#]*)", 1)
-    pre = F.regexp_extract(no_frag, r"^([^?]*)", 1)
-    query = F.regexp_extract(no_frag, r"^[^?]*\?(.*)$", 1)
-    # lowercase scheme://host, keep path verbatim
-    scheme_host = F.regexp_extract(pre, r"^([a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*)", 1)
-    path = F.substring(pre, F.length(scheme_host) + 1, 1 << 30)
-    pre_norm = F.when(
-        scheme_host == "", pre
-    ).otherwise(F.concat(F.lower(scheme_host), path))
-    kept = F.array_sort(
-        F.filter(
-            F.split(query, "&"),
-            lambda p: (p != "") & ~p.rlike(_TRACKING_PARAM_RE),
-        )
-    )
-    qs = F.array_join(kept, "&")
-    return F.when(qs == "", pre_norm).otherwise(F.concat(pre_norm, F.lit("?"), qs))
-
-
 def url_hash_col(url: Column | str) -> Column:
     """Canonical 64-bit url hash for the seen-set / frontier keys.
 
@@ -475,63 +388,3 @@ def url_hash_col(url: Column | str) -> Column:
     cheap (JVM, codegen) — the right key for a 10^10-row seen set."""
     c = F.col(url) if isinstance(url, str) else url
     return F.xxhash64(c)
-
-
-def percent_normalize_col(url: Column | str) -> Column:
-    """RFC 3986 §6.2.2 percent-encoding normalization — the
-    canonicalization gap :func:`dedup_normalize_url_col` leaves open:
-    ``%2e`` vs ``%2E`` vs a literal ``.`` are the SAME resource, and a
-    frontier keyed on the raw string fetches it up to three times.
-
-    Per §6.2.2.1–2: decode escapes of UNRESERVED characters
-    (ALPHA / DIGIT / ``-._~``) to the literal; uppercase the hex of
-    every other escape; pass malformed escapes (non-hex, truncated)
-    through untouched. Pure split + bounded per-row transform (a URL
-    carries a handful of escapes — not a corpus-shaped HOF hot path);
-    identical algebra in the DuckDB oracle.
-    """
-    c = F.col(url) if isinstance(url, str) else url
-    parts = F.split(c, "%", -1)
-    tail = F.slice(parts, 2, F.greatest(F.size(parts) - 1, F.lit(0)))
-
-    def _fix(p: Column) -> Column:
-        hexs = F.upper(F.substring(p, 1, 2))
-        ch = F.char(F.conv(hexs, 16, 10).cast("int"))
-        rest = F.substring(p, 3, 1_000_000)
-        return F.when(
-            p.rlike(r"^[0-9A-Fa-f]{2}"),
-            F.when(ch.rlike(r"^[A-Za-z0-9._~-]$"), F.concat(ch, rest)).otherwise(
-                F.concat(F.lit("%"), hexs, rest)
-            ),
-        ).otherwise(F.concat(F.lit("%"), p))
-
-    return F.concat(
-        F.element_at(parts, 1), F.array_join(F.transform(tail, _fix), "")
-    )
-
-
-def surt_col(url: Column | str) -> Column:
-    """SURT (Sort-friendly URI Reordering Transform) key — the
-    archive-world canonical ordering used by Wayback/Common Crawl
-    index files: host labels reversed and comma-joined, a ``)``
-    separator, then path+query; scheme dropped, host lowercased, a
-    leading ``www.`` label removed (the standard SURT fold). E.g.
-    ``https://www.a.example.com/p?q=1`` → ``com,example,a)/p?q=1``.
-
-    Why it matters at scale: every URL of a registrable domain —
-    across all its subdomains — sorts into ONE contiguous key range,
-    so per-site scans/merges become range scans (the complement of
-    the Z-order clustering keys in datapipe/export). Pure tiny-array
-    JVM exprs, shuffle-free.
-    """
-    c = F.col(url) if isinstance(url, str) else url
-    host = host_of_col(c)
-    host = F.when(host.startswith("www."), F.substr(host, F.lit(5))).otherwise(
-        host
-    )
-    rev = F.array_join(F.reverse(F.split(host, r"\.")), ",")
-    pathq = F.regexp_extract(
-        c, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]*([^#]*)", 1
-    )
-    pathq = F.when(pathq == "", F.lit("/")).otherwise(pathq)
-    return F.concat(rev, F.lit(")"), pathq)

@@ -699,7 +699,7 @@ def clean_param_rules(
     site (``/``). Param names follow the spec charset ``A-Za-z0-9_-``.
 
     This is the site-declared complement of the client-side heuristic
-    strip in ``functions/canon.dedup_normalize_url_col`` — ambiguous
+    strip in ``functions/url_normalize.dedup_normalize_url_col`` — ambiguous
     params (``ref``, ``page``) that canon must keep can be dropped here
     because the site itself said so.
     """

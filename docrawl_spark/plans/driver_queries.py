@@ -2006,7 +2006,7 @@ def q_url_dedup_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheme+host. Three of the four synthesized variants collapse to
     the same normalized url (the tracking noise differs), the fourth
     keeps its path-only form — the frontier-key collapse in miniature."""
-    from docrawl_spark.functions.canon import dedup_normalize_url_col
+    from docrawl_spark.functions.url_normalize import dedup_normalize_url_col
 
     u = _doc_urls(spark, sf_dir)
     raw = F.concat(
@@ -4030,7 +4030,7 @@ def q_percent_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     unreserved escapes (%2e → '.', %7e → '~'), reserved escapes in
     both hex cases (%2f → %2F), malformed escapes (%zz) and a bare
     trailing '%' — all normalized to one frontier key form."""
-    from docrawl_spark.functions.canon import percent_normalize_col
+    from docrawl_spark.functions.url_normalize import percent_normalize_col
 
     m = F.col("doc_id") % 6
     suffix = (
@@ -4642,7 +4642,7 @@ def q_surt_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped, www-fold, host labels reversed — urls spanning www
     prefixes, multi-label co.uk subdomains, bare-host (path → '/'),
     and fragments (dropped)."""
-    from docrawl_spark.functions.canon import surt_col
+    from docrawl_spark.functions.url_normalize import surt_col
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "source")
     s = F.col("doc_id").cast("string")

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from docrawl_spark.functions.canon import host_of_col, url_hash_col
+from docrawl_spark.functions.canon import url_hash_col
 from docrawl_spark.operators.discovery import (
     _DEPTH_BITS,
     pack_order_col,
@@ -139,24 +139,12 @@ def schedule_wave(
 def _seen_side(seen: DataFrame, n_salts: int, n_part: int) -> DataFrame:
     """The seen set as (url_hash, host_hash, _salt), partitioned like the
     candidate side. Accepts (url_hash, host_hash) — url_seen and the
-    bucketed index store it — or (url_hash, url), whose host_hash is
-    derived in JVM codegen."""
+    bucketed index store it, the index with its ``_salt``."""
     cols = set(seen.columns)
-    if "url_hash" not in cols or not cols & {"host_hash", "url"}:
+    if not {"url_hash", "host_hash"} <= cols:
         raise ValueError(
-            "seen frame must carry (url_hash, host_hash) or (url_hash, url); "
+            "seen frame must carry (url_hash, host_hash); "
             f"got columns {sorted(cols)}"
-        )
-    if "host_hash" not in cols:
-        seen = seen.withColumn("host_hash", url_hash_col(host_of_col("url")))
-    elif "url" in cols:
-        # mixed-schema seen table (legacy files resumed under the new
-        # schema read as NULL host_hash): a null key would silently fail
-        # the anti-join and RE-CRAWL those urls — derive the missing
-        # values
-        seen = seen.withColumn(
-            "host_hash",
-            F.coalesce(F.col("host_hash"), url_hash_col(host_of_col("url"))),
         )
     if "_salt" in cols:
         # a sources/seen_index.BucketedSeenIndex scan: already
@@ -226,8 +214,7 @@ def schedule_wave_stages(
 
     ``seen`` must carry (url_hash, host_hash) — url_seen stores it
     (sources/schemas.URL_SEEN_SCHEMA), a BucketedSeenIndex scan adds
-    its stored ``_salt`` — or (url_hash, url), whose host_hash is
-    derived from the url; anything else raises ValueError.
+    its stored ``_salt``; anything else raises ValueError.
 
     ``fused`` and ``persist_tracker`` select nothing (see
     :func:`schedule_wave`)."""

@@ -72,15 +72,7 @@ class BucketedSeenIndex:
         return self.spark.catalog.tableExists(self.table)
 
     def append(self, delta: DataFrame) -> None:
-        """Add (url_hash, host_hash) rows — one wave's fetched set.
-        A legacy frame without host_hash (pre-round-5 url_seen) derives
-        it from ``url``."""
-        if "host_hash" not in delta.columns:
-            from docrawl_spark.functions.canon import host_of_col, url_hash_col
-
-            delta = delta.withColumn(
-                "host_hash", url_hash_col(host_of_col("url"))
-            )
+        """Add (url_hash, host_hash) rows — one wave's fetched set."""
         rows = delta.select(
             "url_hash",
             "host_hash",

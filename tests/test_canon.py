@@ -207,6 +207,10 @@ REFS_BATTERY = [
     "a/./b", "a/../b", "x;y", "/x;y", "a?q", "a#f", "a b", " a",
     "", None, "mailto:info@x", "javascript:void(0)", "a//b", "a/",
     "x" * 300, "../" * 9 + "deep",
+    # '.'/'..' segments after a '../' run, and an empty remainder
+    "../a/./b", "../a/../b", "../..", "..", "../",
+    # a '../' run longer than RE2's 1000-repetition limit
+    "../" * 1001 + "deep",
     # urlsplit deletes tab/CR/LF anywhere and strips leading C0 controls
     "/p\nq", "http://a/b\nc", "a\tb/c", "../x\r", "\x01/p",
     # ... and rejects a netloc with a bad '[...]' or one that
@@ -219,7 +223,7 @@ BASES_BATTERY = [
     "http://h.test/one", "HTTPS://H.test/Mixed/Case", "https://h.test/p?q=1",
     "https://h.test/p;param", "not a url", "", None, "https://h.test//dbl/p",
     "https://h.test/a", "https://h.test/a\tb", "http://[::1/a",
-    "http://é.test/d/", "\x01https://h.test/a",
+    "http://é.test/d/", "\x01https://h.test/a", "https://h.test" + "/s" * 1001,
 ]
 BATTERY = [(r, b) for r in REFS_BATTERY for b in BASES_BATTERY]
 
@@ -247,7 +251,7 @@ def test_canonicalize_arrow_matches_scalar_battery():
     scraped=st.one_of(
         st.sampled_from(
             ["/a/b", "a/b", "../x", "./y", "https://z.org/q?a=1", "//cdn.z.org/i.png",
-             "", ".", "..", "a/../b", "/p?q#f", "x;y", "HTTPS://UP.com/A"]
+             "", ".", "..", "a/../b", "/p?q#f", "x;y", "HTTPS://UP.com/A", "../../a/b"]
         ),
         st.text(alphabet="abc/.?#:&=%\t\n\x01[]／é", max_size=24),
     ),
@@ -256,7 +260,8 @@ def test_canonicalize_arrow_matches_scalar_battery():
         st.sampled_from(
             ["https://example.com", "https://example.com/", "https://example.com/aaa/bbb",
              "http://h.io/p/", "ftp://f.net/d/e", "example.com/noscheme",
-             "https://h.test/a\tb", "http://[::1/a", "http://é.test/d/"]
+             "https://h.test/a\tb", "http://[::1/a", "http://é.test/d/",
+             "https://h.test/a/b/c/d"]
         ),
     ),
 )
@@ -283,7 +288,7 @@ def test_percent_normalize_rfc3986(spark):
     """§6.2.2: unreserved escapes decode, reserved escapes uppercase,
     malformed/truncated escapes pass through, multiple escapes in one
     URL all resolve."""
-    from docrawl_spark.functions.canon import percent_normalize_col
+    from docrawl_spark.functions.url_normalize import percent_normalize_col
 
     cases = {
         "http://h/%2e%2E": "http://h/..",          # unreserved decodes
@@ -313,7 +318,7 @@ def test_percent_normalize_matches_python_spec_and_is_idempotent(spark):
     import random
     import string
 
-    from docrawl_spark.functions.canon import percent_normalize_col
+    from docrawl_spark.functions.url_normalize import percent_normalize_col
 
     def py_norm(u: str) -> str:
         parts = u.split("%")
@@ -349,7 +354,7 @@ def test_percent_normalize_matches_python_spec_and_is_idempotent(spark):
 def test_surt_col_forms(spark):
     """SURT: www fold, label reversal, bare-path '/', fragment drop,
     query kept, multi-label hosts."""
-    from docrawl_spark.functions.canon import surt_col
+    from docrawl_spark.functions.url_normalize import surt_col
 
     cases = [
         ("https://www.a.example.com/p?q=1", "com,example,a)/p?q=1"),

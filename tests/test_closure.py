@@ -10,13 +10,14 @@ from pathlib import Path
 
 SCRIPT = Path(__file__).resolve().parent.parent / "scripts" / "closure_lines.py"
 
-MAX_LINES = 2800
+MAX_LINES = 2300
 LIBRARY_ONLY = [
     "docrawl_spark.operators.politeness",
     "docrawl_spark.operators.links",
     "docrawl_spark.operators.recrawl",
     "docrawl_spark.functions.cuckoo",
     "docrawl_spark.functions.domains",
+    "docrawl_spark.functions.url_normalize",
 ]
 
 
@@ -27,7 +28,7 @@ def _closure_lines():
     return mod
 
 
-def test_closure_is_at_most_2800_lines():
+def test_closure_is_at_most_max_lines():
     n = _closure_lines().line_count()
     assert n <= MAX_LINES, f"crawl closure is {n} lines (> {MAX_LINES})"
 

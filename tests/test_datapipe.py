@@ -461,7 +461,7 @@ def test_host_degree_metrics(spark):
 
 
 def test_dedup_normalize_url(spark):
-    from docrawl_spark.functions.canon import dedup_normalize_url_col
+    from docrawl_spark.functions.url_normalize import dedup_normalize_url_col
 
     cases = [
         # tracking params stripped, rest sorted, fragment dropped

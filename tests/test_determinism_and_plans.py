@@ -885,8 +885,7 @@ def test_schedule_wave_matches_oracle(spark):
     """The integrated hash-only wave (plans/wave.schedule_wave: gate +
     hash-keyed dedup + anti-join + budgets + rank + pack-keyed rejoin)
     must reproduce the pure-Python wave oracle exactly — duplicates
-    present, robots blocks, and both accepted seen schemas (stored
-    host_hash, or a legacy url-only frame that derives it)."""
+    present, robots blocks, and a (url_hash, host_hash) seen frame."""
     from docrawl_spark.functions.canon import url_hash_col
     from docrawl_spark.plans.wave import schedule_wave
 
@@ -937,15 +936,14 @@ def test_schedule_wave_matches_oracle(spark):
     urls = [r["url"] for r in rows]
     assert len(set(urls)) < len(urls)
     assert "https://h0.test/p13" in urls  # blocked by h0's "/p1" rule
-    for seen_frame in (seen.select("url_hash", "host_hash"), seen.select("url_hash", "url")):
-        got_df = schedule_wave(cands, hosts, seen=seen_frame)
-        got = {
-            tuple(r)
-            for r in got_df.select(
-                "url_hash", "url", "host", "parent_rank", "offset", "_wave_rank"
-            ).collect()
-        }
-        assert got == ref
+    got_df = schedule_wave(cands, hosts, seen=seen.select("url_hash", "host_hash"))
+    got = {
+        tuple(r)
+        for r in got_df.select(
+            "url_hash", "url", "host", "parent_rank", "offset", "_wave_rank"
+        ).collect()
+    }
+    assert got == ref
     # discovered_by comes back from the KEPT occurrence (its parent)
     lineage = {
         (r["parent_rank"], r["discovered_by"])
@@ -955,10 +953,10 @@ def test_schedule_wave_matches_oracle(spark):
 
 
 def test_schedule_wave_rejects_unusable_seen_frame(spark):
-    """The wave's 3-key anti-join needs the seen set's host_hash, stored
-    or derivable from its url: a seen frame with neither (or without
-    url_hash) is refused with an error naming both accepted schemas,
-    not left to fail as an unresolved column deep in the plan."""
+    """The wave's 3-key anti-join needs the seen set's url_hash and
+    host_hash: a seen frame without either is refused with an error
+    naming the accepted schema, not left to fail as an unresolved
+    column deep in the plan."""
     from docrawl_spark.plans.wave import schedule_wave, schedule_wave_stages
 
     cands = spark.range(10).select(
@@ -976,12 +974,13 @@ def test_schedule_wave_rejects_unusable_seen_frame(spark):
     )
     hash_only = cands.select("url_hash")
     url_only = cands.select("url")
+    hash_and_url = cands.select("url_hash", "url")
     for build in (schedule_wave, schedule_wave_stages):
-        for bad in (hash_only, url_only):
+        for bad in (hash_only, url_only, hash_and_url):
             with pytest.raises(ValueError) as err:
                 build(cands, hosts, seen=bad)
             msg = str(err.value)
-            assert "(url_hash, host_hash)" in msg and "(url_hash, url)" in msg, msg
+            assert "(url_hash, host_hash)" in msg, msg
 
 
 def test_schedule_wave_no_exchange_carries_strings(spark):
@@ -1141,7 +1140,7 @@ def test_fused_wave_single_big_exchange_and_equality(spark):
     # exchanges touch the salt)
     assert "HashAggregate" in plan
 
-    # -- equality vs the oracle, incl. legacy seen -------------------------
+    # -- equality vs the oracle ---------------------------------------------
     def run(seen_frame):
         out = schedule_wave(c, hosts, n_salts=4, rank_col="rk", seen=seen_frame)
         return sorted((r["url"], r["rk"]) for r in out.collect())
@@ -1154,5 +1153,4 @@ def test_fused_wave_single_big_exchange_and_equality(spark):
     )
     assert len(ref) > 0
     assert run(seen.select("url_hash", "host_hash")) == ref
-    assert run(seen.select("url_hash", "url")) == ref  # legacy derive
     spark.catalog.clearCache()

@@ -3,6 +3,10 @@ revisit (operators/recrawl.py)."""
 
 from __future__ import annotations
 
+import shutil
+from types import SimpleNamespace
+
+import pytest
 from pyspark.sql import functions as F
 
 from docrawl_spark.functions.canon import url_hash_col
@@ -16,18 +20,32 @@ from docrawl_spark.sources.fixtures import fixture_to_dfs, generate_web
 from docrawl_spark.sources.storage import Warehouse
 
 
-def test_retire_and_recrawl(spark, tmp_path):
+@pytest.fixture(scope="module")
+def exhausted(spark, tmp_path_factory):
+    """generate_web(seed=13) crawled to EXHAUSTION, so frontier_pending
+    holds only unreachable (robots-blocked) leftovers — retirement then
+    fully determines the resumed visits. Tests that retire work on a
+    copy of the warehouse (:func:`_copy_warehouse`)."""
     fx = generate_web(seed=13)
     docs, hosts, seeds = fixture_to_dfs(spark, fx)
-    wh = Warehouse(str(tmp_path / "wh"), spark)
-    # crawl to EXHAUSTION so frontier_pending holds only unreachable
-    # (robots-blocked) leftovers — retirement then fully determines the
-    # resumed visits
+    root = str(tmp_path_factory.mktemp("exhausted") / "wh")
     res = run_crawl(
-        spark, docs, hosts, seeds, max_waves=12, warehouse=wh,
-        collect_visits=True,
+        spark, docs, hosts, seeds, max_waves=12,
+        warehouse=Warehouse(root, spark), collect_visits=True,
     )
     assert max(w for w, _ in res.visits) < 11, "graph not exhausted"
+    return SimpleNamespace(docs=docs, hosts=hosts, seeds=seeds, res=res, root=root)
+
+
+def _copy_warehouse(spark, exhausted, dest) -> Warehouse:
+    shutil.copytree(exhausted.root, dest)
+    return Warehouse(str(dest), spark)
+
+
+def test_retire_and_recrawl(spark, tmp_path, exhausted):
+    docs, hosts, seeds = exhausted.docs, exhausted.hosts, exhausted.seeds
+    res = exhausted.res
+    wh = _copy_warehouse(spark, exhausted, tmp_path / "wh")
     wave0 = {u for w, u in res.visits if w == 0}
     assert wave0
 
@@ -166,7 +184,7 @@ def test_midcrawl_retire_keeps_every_pending_row(spark, tmp_path):
     } == {x: (2, 1, "p2"), y: (-1, 0, None)}
 
 
-def test_sitemap_lastmod_drives_recrawl(spark, tmp_path):
+def test_sitemap_lastmod_drives_recrawl(spark, tmp_path, exhausted):
     """End-to-end sitemap-freshness loop: crawl to exhaustion → ingest a
     sitemap whose <lastmod> post-dates the fetch for SOME visited urls
     (plus a stale one, a malformed one, and a never-seen one) → retire →
@@ -174,14 +192,9 @@ def test_sitemap_lastmod_drives_recrawl(spark, tmp_path):
     from docrawl_spark.operators.recrawl import retire_stale_by_sitemap
     from docrawl_spark.operators.sitemap import sitemap_entries
 
-    fx = generate_web(seed=13)
-    docs, hosts, seeds = fixture_to_dfs(spark, fx)
-    wh = Warehouse(str(tmp_path / "wh_sm"), spark)
-    res = run_crawl(
-        spark, docs, hosts, seeds, max_waves=12, warehouse=wh,
-        collect_visits=True,
-    )
-    assert max(w for w, _ in res.visits) < 11, "graph not exhausted"
+    docs, hosts, seeds = exhausted.docs, exhausted.hosts, exhausted.seeds
+    res = exhausted.res
+    wh = _copy_warehouse(spark, exhausted, tmp_path / "wh_sm")
     visited = [u for _, u in res.visits]
     fresh = sorted(visited)[:3]          # lastmod 2030 > any fetched_at (2024 epoch)
     stale = sorted(visited)[3]           # lastmod 2000 < fetched_at
